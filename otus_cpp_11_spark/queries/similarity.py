@@ -1247,17 +1247,6 @@ def _pq_index_cells(
     return reduce(DataFrame.unionByName, parts)
 
 
-def _adc_expr(dtable: list[list[int]]) -> Column:
-    """ADC over STORED code columns: PQ_SUBVECTORS array lookups + adds
-    per row — zero float math, zero encode at query time."""
-    adc = None
-    for s in range(PQ_SUBVECTORS):
-        table = F.array(*[F.lit(v).cast("bigint") for v in dtable[s]])
-        term = F.element_at(table, (F.col(f"code_{s}") + 1).cast("int"))
-        adc = term if adc is None else adc + term
-    return adc
-
-
 def _adc_expr_cells(dtables: list[list[list[int]]]) -> Column:
     """Residual ADC over STORED (cell, codes): the distance table is
     per-cell (``_pq_res_dtables``), so the lookup is
@@ -1400,6 +1389,65 @@ def knn_join_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cosine_topk(
+    q: DataFrame, cand: DataFrame, on: Column | None = None
+) -> DataFrame:
+    """Per-query top-{KNN_TOPK} ``(query_id, nid)`` by fixed-point cosine
+    (``nid`` tie-break) of the query side ``(query_id, qv, qn)`` against
+    the candidate side ``(nid, cv, cn)``, norms precomputed per side.
+    ``on=None`` is the exact arm — every candidate but the query itself
+    (the query side is a bounded sample, so this is a broadcast nested
+    loop, never corpus x corpus); a join condition gives the blocked arm
+    (e.g. the LSH bucket equi-join)."""
+    not_self = F.col("nid") != F.col("query_id")
+    pairs = (
+        q.crossJoin(cand).where(not_self)
+        if on is None
+        else q.join(cand, on & not_self)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
+    return (
+        pairs.select(
+            "query_id",
+            "nid",
+            cosine_from_norms(
+                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
+            ).alias("cosine"),
+        )
+        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
+        .where(F.col("rnk") <= KNN_TOPK)
+        .select("query_id", "nid")
+    )
+
+
+def _overlap_recall(
+    exact_top: DataFrame, approx_top: DataFrame, keys: list[str]
+) -> DataFrame:
+    """``n_overlap`` and ``recall`` of the approximate top-k against the
+    exact top-k, both ``(query_id, nid)``, aggregated over ``keys``
+    (``["query_id"]`` per query, ``[]`` for one probe-set scalar). The
+    exact rows LEFT-join the approximate ones and recall is the overlap
+    over the EXACT row count, not the constant k: a query with fewer
+    than k exact neighbors (tiny corpus, a selective filter) still
+    measures recall-of-achievable instead of silently understating
+    (r5 ADVICE)."""
+    approx = approx_top.select(
+        F.col("query_id").alias("l_qid"), F.col("nid").alias("l_nid")
+    )
+    return (
+        exact_top.join(
+            approx,
+            (F.col("query_id") == F.col("l_qid")) & (F.col("nid") == F.col("l_nid")),
+            "left",
+        )
+        .groupBy(*keys)
+        .agg(
+            F.count("l_nid").alias("n_overlap"),
+            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias("recall"),
+        )
+    )
+
+
 @register(
     "knn_recall_at_3",
     oracle=f"""
@@ -1473,55 +1521,9 @@ def knn_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bucket_col(F.col("embedding")).alias("bucket"),
         F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(cand)
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
-    lsh_top = (
-        q.join(
-            cand,
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("nid") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select(F.col("query_id").alias("l_qid"), F.col("nid").alias("l_nid"))
-    )
-    return (
-        exact_top.join(
-            lsh_top,
-            (F.col("query_id") == F.col("l_qid")) & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("l_nid").alias("n_overlap"),
-            # denominator = this query's EXACT top-k row count, not the
-            # constant k: if a query ever has fewer than k exact
-            # neighbors (tiny corpus, future KNN_QUERY_MOD change) the
-            # metric stays recall-of-achievable instead of silently
-            # understating (r5 ADVICE).
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias("recall"),
-        )
-        .orderBy("query_id")
+    lsh_top = _cosine_topk(q, cand, F.col("bucket") == F.col("qbucket"))
+    return _overlap_recall(_cosine_topk(q, cand), lsh_top, ["query_id"]).orderBy(
+        "query_id"
     )
 
 
@@ -1718,6 +1720,47 @@ TRUNC_RECALL_K = 5
 TRUNC_N_QUERIES = 20
 
 
+def _stacked_recall(
+    scored: DataFrame, order: Column, k: int, variants: list[str]
+) -> DataFrame:
+    """Recall@k of each variant's ranking against the ``exact`` one, from
+    ONE stacked ``(qid, vec_id, metric, score)`` frame ranked by
+    ``order`` (``vec_id`` tie-break). One ``salted_topk`` over (qid,
+    metric) ranks every metric in one DAG branch — separate branches
+    over the uncached scored frame would re-run the dominant scoring
+    pass per metric (r8 review finding) — and the recall join collapses
+    to a (qid, vec_id) membership-flag aggregate over exact's top-k, so
+    no self-join of the same lineage forms. Returns ``qid``, then
+    ``n_hits_<v>`` and ``recall_<v> = n_hits_<v> / k`` per variant,
+    ordered by qid. The row set is exact's, so a variant with no hits
+    still reports its query with ``n_hits_<v> = 0``."""
+    from otus_cpp_11_spark.ops.skew import salted_topk
+
+    topk = salted_topk(
+        scored, ["qid", "metric"], [order, F.col("vec_id")], k, salt_on="vec_id"
+    )
+    hits = [(v, F.sum(F.col(f"in_{v}").cast("bigint"))) for v in variants]
+    return (
+        topk.groupBy("qid", "vec_id")
+        .agg(
+            *[
+                F.max(F.col("metric") == m).alias(f"in_{m}")
+                for m in ["exact", *variants]
+            ]
+        )
+        .where("in_exact")
+        .groupBy("qid")
+        .agg(
+            *[n.alias(f"n_hits_{v}") for v, n in hits],
+            *[
+                (n.cast("double") / F.lit(float(k))).alias(f"recall_{v}")
+                for v, n in hits
+            ],
+        )
+        .orderBy("qid")
+    )
+
+
 @register(
     "ann_truncated_dim_recall",
     oracle=f"""
@@ -1775,8 +1818,6 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first-stage candidate generation this eval justifies would run
     over the IVF/PQ index rather than brute force. Reference parity:
     extension mandate (LLM-pipeline battery)."""
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     tr = lambda c: F.slice(c, 1, TRUNC_DIM)  # noqa: E731
     # r14 (guide §2.3, the item-14 shape): four of the six decimal folds
@@ -1820,41 +1861,15 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s_trunc"),
         )
     )
-    # BOTH rankings in one DAG branch: stack the two similarities into
-    # (metric, s) rows and rank per (qid, metric) — two independent
-    # salted_topk branches over the uncached `scored` would re-execute
-    # the dominant fixed-point scoring pass twice (r8 review finding).
-    # The recall join then collapses to a (qid, vec_id) flag aggregate:
-    # a vec_id in both metrics' top-k is a hit, and no self-join of the
-    # same lineage (which would also re-scan) ever forms.
     both = scored.selectExpr(
         "qid",
         "vec_id",
-        "stack(2, 'full', s_full, 'trunc', s_trunc) AS (metric, s)",
+        "stack(2, 'exact', s_full, 'trunc', s_trunc) AS (metric, s)",
     )
-    topk = salted_topk(
-        both,
-        ["qid", "metric"],
-        [F.desc("s"), F.col("vec_id")],
-        TRUNC_RECALL_K,
-        salt_on="vec_id",
-    )
-    return (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "full").alias("in_full"),
-            F.max(F.col("metric") == "trunc").alias("in_trunc"),
-        )
-        .where("in_full")  # recall's denominator set
-        .groupBy("qid")
-        .agg(
-            F.sum(F.col("in_trunc").cast("bigint")).alias("n_hits"),
-            (
-                F.sum(F.col("in_trunc").cast("bigint")).cast("double")
-                / F.lit(float(TRUNC_RECALL_K))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("qid")
+    return _stacked_recall(both, F.desc("s"), TRUNC_RECALL_K, ["trunc"]).select(
+        "qid",
+        F.col("n_hits_trunc").alias("n_hits"),
+        F.col("recall_trunc").alias("recall_at_k"),
     )
 
 
@@ -2561,6 +2576,97 @@ def _curve_select_sql(
     return "\nUNION ALL\n".join(selects) + "\nORDER BY iter"
 
 
+def _pq_eval_queries(src: DataFrame):
+    """The PQ recall gates' eval queries — vec_id in [PQ_CODEBOOK,
+    PQ_CODEBOOK + PQ_RQ_N) of ``src`` — as (ids int64, vectors float64)
+    numpy arrays: one bounded driver collect."""
+    import numpy as np
+
+    rows = (
+        src.where(
+            (F.col("vec_id") >= PQ_CODEBOOK)
+            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
+        )
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    qids = np.array([int(r["vec_id"]) for r in rows], dtype=np.int64)
+    qmat = np.array(
+        [[float(x) for x in r["embedding"]] for r in rows], dtype=np.float64
+    )
+    return qids, qmat
+
+
+_PQ_IDENTITY = list(range(_PQ_FULL))
+
+
+def _pq_adc_scored(src: DataFrame, qids, qmat, arms: list) -> DataFrame:
+    """``(vec_id, qid, metric, d)`` of every ``src`` vector against every
+    eval query in ONE Arrow-vectorized pass: metric ``exact`` is the
+    fixed-point squared L2 (per-element floor BEFORE the sum — the
+    decimal recipe; terms < 2^53 so the float64 floor is exact, totals in
+    int64), and each ``(name, codebook, posmap)`` arm adds the ADC
+    distance of the vector's code under ``codebook`` after the dimension
+    permutation ``posmap`` (``_PQ_IDENTITY`` for the raw split) — the
+    exact integer tables are built on the driver per query, so ADC is
+    NQ lookups per subvector. Self-pairs are dropped."""
+    import numpy as np
+    import pandas as pd
+
+    tables = [
+        (
+            name,
+            _pq_slice_mat(cb),
+            np.array(pm, dtype=np.int64),
+            np.array(
+                [_pq_dtable_slices(cb, list(q[pm])) for q in qmat],
+                dtype=np.int64,
+            ),  # (NQ, S, K) ADC tables, exact ints
+        )
+        for name, cb, pm in arms
+    ]
+
+    def score(batches):
+        for pdf in batches:
+            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            vid = pdf["vec_id"].to_numpy()
+            diffs = emb[:, None, :] - qmat[None, :, :]  # n x NQ x dim
+            ds = [
+                (
+                    "exact",
+                    np.floor(diffs * diffs * float(PQ_SCALE))
+                    .astype(np.int64)
+                    .sum(axis=2),
+                )
+            ]
+            for name, cmat, pm, tab in tables:
+                codes = _pq_encode_np(emb[:, pm], cmat)
+                adc = np.zeros((len(vid), len(qids)), dtype=np.int64)
+                for s in range(PQ_SUBVECTORS):
+                    adc += tab[:, s, :][:, codes[:, s]].T
+                ds.append((name, adc))
+            yield pd.concat(
+                [
+                    pd.DataFrame(
+                        {
+                            "vec_id": np.repeat(vid, len(qids)),
+                            "qid": np.tile(qids, len(vid)),
+                            "metric": metric,
+                            "d": d.reshape(-1),
+                        }
+                    )
+                    for metric, d in ds
+                ],
+                ignore_index=True,
+            )
+
+    return (
+        spread(src.select("vec_id", "embedding"))
+        .mapInPandas(score, "vec_id bigint, qid bigint, metric string, d bigint")
+        .where(F.col("vec_id") != F.col("qid"))
+    )
+
+
 @register(
     "pq_recall_trained_vs_init",
     bench=True,
@@ -2654,113 +2760,19 @@ def pq_recall_trained_vs_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ_TRAIN_ITERS linear assignment passes plus a K x dim aggregate
     each (the IVF/k-means shape), eval queries stay bounded. Reference
     parity: extension mandate (LLM-pipeline battery)."""
-    import numpy as np
-    import pandas as pd
-
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     init = _pq_init_slices(e)
     trained, _curve, n_iters, _cvg = _pq_trained(spark, sf_dir)
-    ci = _pq_slice_mat(init)
-    ct = _pq_slice_mat(trained)
-    qrows = (
-        e.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()
+    qids, qmat = _pq_eval_queries(e)
+    scored = _pq_adc_scored(
+        e,
+        qids,
+        qmat,
+        [("init", init, _PQ_IDENTITY), ("trained", trained, _PQ_IDENTITY)],
     )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-    )
-    ti = np.array(
-        [_pq_dtable_slices(init, list(q)) for q in qmat], dtype=np.int64
-    )  # (NQ, S, K) ADC tables, exact ints
-    tt = np.array(
-        [_pq_dtable_slices(trained, list(q)) for q in qmat], dtype=np.int64
-    )
-
-    def score(batches):
-        for pdf in batches:
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy()
-            n = emb.shape[0]
-            codes_i = _pq_encode_np(emb, ci)
-            codes_t = _pq_encode_np(emb, ct)
-            # per-element floor BEFORE the sum (the decimal recipe);
-            # terms < 2^53 so float64 floor is exact, totals in int64
-            diffs = emb[:, None, :] - qmat[None, :, :]  # n x NQ x dim
-            exact = (
-                np.floor(diffs * diffs * float(PQ_SCALE))
-                .astype(np.int64)
-                .sum(axis=2)
-            )  # n x NQ
-            adc_i = np.zeros((n, len(qids)), dtype=np.int64)
-            adc_t = np.zeros((n, len(qids)), dtype=np.int64)
-            for s in range(PQ_SUBVECTORS):
-                adc_i += ti[:, s, :][:, codes_i[:, s]].T  # NQ lookups
-                adc_t += tt[:, s, :][:, codes_t[:, s]].T
-            frames = []
-            for metric, d in (
-                ("exact", exact),
-                ("init", adc_i),
-                ("trained", adc_t),
-            ):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vid, len(qids)),
-                            "qid": np.tile(qids, n),
-                            "metric": metric,
-                            "d": d.reshape(-1),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = (
-        spread(e.select("vec_id", "embedding"))
-        .mapInPandas(
-            score, "vec_id bigint, qid bigint, metric string, d bigint"
-        )
-        .where(F.col("vec_id") != F.col("qid"))
-    )
-    topk = salted_topk(
-        scored,
-        ["qid", "metric"],
-        [F.asc("d"), F.col("vec_id")],
-        PQ_RQ_K,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "init").alias("in_init"),
-            F.max(F.col("metric") == "trained").alias("in_trained"),
-        )
-        .where("in_exact")
-    )
-    return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("in_init").cast("bigint")).alias("n_hits_init"),
-            F.sum(F.col("in_trained").cast("bigint")).alias("n_hits_trained"),
-            (
-                F.sum(F.col("in_init").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_init"),
-            (
-                F.sum(F.col("in_trained").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_trained"),
-            F.lit(int(n_iters)).cast("bigint").alias("n_iters"),
-        )
-        .orderBy("qid")
-    )
+    return _stacked_recall(
+        scored, F.asc("d"), PQ_RQ_K, ["init", "trained"]
+    ).withColumn("n_iters", F.lit(int(n_iters)).cast("bigint"))
 
 
 @register(
@@ -2865,66 +2877,14 @@ def pq_recall_residual_vs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     same Arrow pass that scores exact ground truth (one corpus pass
     total); ranking joins touch k·|queries| rows. The oracle recomputes
     both trainings, both encodes, and both rankings from scratch."""
-    import numpy as np
-    import pandas as pd
-
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     raw, _, _, _ = _pq_trained(spark, sf_dir, pre_ingest=True)
     cents, _, _, _ = _ivf_trained(spark, sf_dir, pre_ingest=True)
     res, _, _, _ = _pq_trained_res(spark, sf_dir, pre_ingest=True)
-    cr = _pq_slice_mat(raw)
-    qrows = (
-        e.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-    )
-    tr = np.array(
-        [_pq_dtable_slices(raw, list(q)) for q in qmat], dtype=np.int64
-    )  # (NQ, S, K) raw ADC tables, exact ints
-
-    def score(batches):
-        # exact ground truth + raw-PQ ADC in one Arrow pass (the raw
-        # side has no stored index — it is the counterfactual)
-        for pdf in batches:
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy()
-            n = emb.shape[0]
-            codes_r = _pq_encode_np(emb, cr)
-            diffs = emb[:, None, :] - qmat[None, :, :]
-            exact = (
-                np.floor(diffs * diffs * float(PQ_SCALE))
-                .astype(np.int64)
-                .sum(axis=2)
-            )
-            adc_r = np.zeros((n, len(qids)), dtype=np.int64)
-            for s in range(PQ_SUBVECTORS):
-                adc_r += tr[:, s, :][:, codes_r[:, s]].T
-            frames = []
-            for metric, d in (("exact", exact), ("raw", adc_r)):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vid, len(qids)),
-                            "qid": np.tile(qids, n),
-                            "metric": metric,
-                            "d": d.reshape(-1),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored_er = spread(e.select("vec_id", "embedding")).mapInPandas(
-        score, "vec_id bigint, qid bigint, metric string, d bigint"
-    )
+    qids, qmat = _pq_eval_queries(e)
+    # the raw side has no stored index — it is the counterfactual, encoded
+    # inline in the exact ground-truth pass
+    scored_er = _pq_adc_scored(e, qids, qmat, [("raw", raw, _PQ_IDENTITY)])
     # residual side: per-cell table lookups over the SERVED index — the
     # artifact pq_adc_top10 / ivf_pq_top5 scan
     entries = [
@@ -2945,43 +2905,10 @@ def pq_recall_residual_vs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("residual").alias("metric"),
             F.col("x.d").alias("d"),
         )
+        .where(F.col("vec_id") != F.col("qid"))
     )
-    scored = scored_er.unionByName(scored_res).where(
-        F.col("vec_id") != F.col("qid")
-    )
-    topk = salted_topk(
-        scored,
-        ["qid", "metric"],
-        [F.asc("d"), F.col("vec_id")],
-        PQ_RQ_K,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "raw").alias("in_raw"),
-            F.max(F.col("metric") == "residual").alias("in_residual"),
-        )
-        .where("in_exact")
-    )
-    return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("in_raw").cast("bigint")).alias("n_hits_raw"),
-            F.sum(F.col("in_residual").cast("bigint")).alias(
-                "n_hits_residual"
-            ),
-            (
-                F.sum(F.col("in_raw").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_raw"),
-            (
-                F.sum(F.col("in_residual").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_residual"),
-        )
-        .orderBy("qid")
+    return _stacked_recall(
+        scored_er.unionByName(scored_res), F.asc("d"), PQ_RQ_K, ["raw", "residual"]
     )
 
 
@@ -3100,20 +3027,11 @@ def ivf_pq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     cents, _, _, _ = _ivf_trained(spark, sf_dir, pre_ingest=True)
     res, _, _, _ = _pq_trained_res(spark, sf_dir, pre_ingest=True)
-    qrows = (
-        e.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
+    qids, qmat = _pq_eval_queries(e)
+    qvecs = [[float(x) for x in q] for q in qmat]
     qdf = F.broadcast(
         spark.createDataFrame(
-            [
-                (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-                for r in qrows
-            ],
+            [(int(qid), qv) for qid, qv in zip(qids, qvecs)],
             "qid bigint, qv array<double>",
         )
     )
@@ -3121,14 +3039,10 @@ def ivf_pq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan, per-(query, cell) tables as plan literals
     entries = [
         F.struct(
-            F.lit(int(r["vec_id"])).cast("bigint").alias("qid"),
-            _adc_expr_cells(
-                _pq_res_dtables(
-                    cents, res, [float(x) for x in r["embedding"]]
-                )
-            ).alias("d"),
+            F.lit(int(qid)).cast("bigint").alias("qid"),
+            _adc_expr_cells(_pq_res_dtables(cents, res, qv)).alias("d"),
         )
-        for r in qrows
+        for qid, qv in zip(qids, qvecs)
     ]
     scored = (
         _pq_index_df(spark, sf_dir)
@@ -4545,39 +4459,11 @@ def knn_ivfpq_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cv"),
         F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(cand)
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
     ivf_top = _knn_ivfpq_ranked(spark, sf_dir).select(
-        F.col("query_id").alias("l_qid"), F.col("neighbor_id").alias("l_nid")
+        "query_id", F.col("neighbor_id").alias("nid")
     )
-    return (
-        exact_top.join(
-            ivf_top,
-            (F.col("query_id") == F.col("l_qid"))
-            & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("l_nid").alias("n_overlap"),
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("query_id")
+    return _overlap_recall(_cosine_topk(q, cand), ivf_top, ["query_id"]).orderBy(
+        "query_id"
     )
 
 
@@ -4699,39 +4585,11 @@ def knn_ivfpq_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cv"),
         F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(cand)
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
     ivf_top = _knn_ivfpq_ranked(spark, sf_dir, allowed=allowed).select(
-        F.col("query_id").alias("l_qid"), F.col("neighbor_id").alias("l_nid")
+        "query_id", F.col("neighbor_id").alias("nid")
     )
-    return (
-        exact_top.join(
-            ivf_top,
-            (F.col("query_id") == F.col("l_qid"))
-            & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("l_nid").alias("n_overlap"),
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("query_id")
+    return _overlap_recall(_cosine_topk(q, cand), ivf_top, ["query_id"]).orderBy(
+        "query_id"
     )
 
 
@@ -4852,48 +4710,33 @@ def sq8_retrieval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("xu").alias("qxu"),
     )
 
-    def _isum(a: str, b: str) -> Column:
-        return F.aggregate(
+    paired = codes.join(F.broadcast(qs)).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    w = Window.partitionBy("query_id").orderBy("d", "vec_id")
+
+    def top(a: str, b: str) -> DataFrame:
+        # top-k by integer squared L2 between the a (corpus) and b (query)
+        # unit vectors
+        d = F.aggregate(
             F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
             F.lit(0).cast("bigint"),
             lambda acc, t: acc + t,
         )
+        return (
+            paired.select("query_id", "vec_id", d.alias("d"))
+            .select(
+                "query_id",
+                F.col("vec_id").alias("nid"),
+                F.row_number().over(w).alias("rnk"),
+            )
+            .where(F.col("rnk") <= SQ8_K)
+            .select("query_id", "nid")
+        )
 
-    paired = codes.join(F.broadcast(qs)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    w8 = Window.partitionBy("query_id").orderBy("d8", "vec_id")
-    sq8_top = (
-        paired.select("query_id", "vec_id", _isum("qa", "qqa").alias("d8"))
-        .select("query_id", "vec_id", F.row_number().over(w8).alias("rnk"))
-        .where(F.col("rnk") <= SQ8_K)
-        .select("query_id", "vec_id")
-    )
-    wx = Window.partitionBy("query_id").orderBy("dx", "vec_id")
-    exact_top = (
-        paired.select("query_id", "vec_id", _isum("xu", "qxu").alias("dx"))
-        .select("query_id", "vec_id", F.row_number().over(wx).alias("rnk"))
-        .where(F.col("rnk") <= SQ8_K)
-        .select(
-            F.col("query_id").alias("x_qid"), F.col("vec_id").alias("x_vid")
-        )
-    )
-    return (
-        exact_top.join(
-            sq8_top,
-            (F.col("x_qid") == F.col("query_id"))
-            & (F.col("x_vid") == F.col("vec_id")),
-            "left",
-        )
-        .groupBy(F.col("x_qid").alias("query_id"))
-        .agg(
-            F.count("vec_id").alias("n_overlap"),
-            (F.count("vec_id").cast("double") / F.count(F.lit(1))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _overlap_recall(
+        top("xu", "qxu"), top("qa", "qqa"), ["query_id"]
+    ).orderBy("query_id")
 
 
 @register(
@@ -5050,8 +4893,6 @@ def ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     model artifact is K rows) and the probed fraction is nprobe/K of
     the corpus per query — the IVF contract. Reference parity:
     extension mandate (LLM-pipeline battery)."""
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     seeds_rows = (
         e.where(F.col("vec_id") < IVF_T_K)
@@ -5139,41 +4980,9 @@ def ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("metric"),
     )
-    topk = salted_topk(
-        stacked,
-        ["qid", "metric"],
-        [F.asc("d2"), F.col("vec_id")],
-        IVF_T_TOPK,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "seeded").alias("hit_seeded"),
-            F.max(F.col("metric") == "trained").alias("hit_trained"),
-        )
-        .where("in_exact")
-    )
-    return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("hit_seeded").cast("bigint")).alias("n_hits_seeded"),
-            F.sum(F.col("hit_trained").cast("bigint")).alias(
-                "n_hits_trained"
-            ),
-            (
-                F.sum(F.col("hit_seeded").cast("bigint")).cast("double")
-                / F.lit(float(IVF_T_TOPK))
-            ).alias("recall_seeded"),
-            (
-                F.sum(F.col("hit_trained").cast("bigint")).cast("double")
-                / F.lit(float(IVF_T_TOPK))
-            ).alias("recall_trained"),
-            F.lit(int(n_iters)).cast("bigint").alias("n_iters"),
-        )
-        .orderBy("qid")
-    )
+    return _stacked_recall(
+        stacked, F.asc("d2"), IVF_T_TOPK, ["seeded", "trained"]
+    ).withColumn("n_iters", F.lit(int(n_iters)).cast("bigint"))
 
 
 # ---------------------------------------------------------------------------
@@ -5320,47 +5129,16 @@ def _knn_mean_recall(
         F.col("embedding").alias("qv"),
         F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(
-            e.select(
-                F.col("vec_id").alias("nid"),
-                F.col("embedding").alias("cv"),
-                F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias(
-                    "cn"
-                ),
-            )
-        )
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
+    cand = e.select(
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").alias("cv"),
+        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
     )
     approx = _knn_ivfpq_ranked(
         spark, sf_dir, index_path=index_path, artifacts=artifacts
-    ).select(
-        F.col("query_id").alias("l_qid"), F.col("neighbor_id").alias("l_nid")
-    )
-    row = (
-        exact_top.join(
-            approx,
-            (F.col("query_id") == F.col("l_qid"))
-            & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .agg(
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias("r")
-        )
-        .first()
-    )
-    return float(row["r"])
+    ).select("query_id", F.col("neighbor_id").alias("nid"))
+    row = _overlap_recall(_cosine_topk(q, cand), approx, []).first()
+    return float(row["recall"])
 
 
 _ROUTER_SCHEMA = "alias string, index_path string, lineage string"
@@ -5957,11 +5735,6 @@ def pq_recall_opq_vs_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     select (exact, no float churn); training is {_OPQ_QN} exact Lloyd
     passes per side. At 100 TB: same linear-pass economics as the
     trained-vs-init gate, plus one bounded 64-row variance collect."""
-    import numpy as np
-    import pandas as pd
-
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     fx = _opq_fixture(spark, sf_dir)
     posmap = _opq_posmap(spark, sf_dir)
     fo = _opq_rotated(fx, posmap)
@@ -5973,103 +5746,14 @@ def pq_recall_opq_vs_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         _TRAINED_CACHE[ko] = _pq_train(fo)
     cb_i, _, _, _ = _TRAINED_CACHE[ki]
     cb_o, _, _, _ = _TRAINED_CACHE[ko]
-    ci = _pq_slice_mat(cb_i)
-    co = _pq_slice_mat(cb_o)
-    pm = np.array(posmap, dtype=np.int64)
-    qrows = (
-        fx.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded: PQ_RQ_N eval queries
+    qids, qmat = _pq_eval_queries(fx)
+    scored = _pq_adc_scored(
+        fx,
+        qids,
+        qmat,
+        [("identity", cb_i, _PQ_IDENTITY), ("opq", cb_o, posmap)],
     )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-    )
-    ti = np.array(
-        [_pq_dtable_slices(cb_i, list(q)) for q in qmat], dtype=np.int64
-    )
-    to = np.array(
-        [_pq_dtable_slices(cb_o, list(q[pm])) for q in qmat], dtype=np.int64
-    )
-
-    def score(batches):
-        for pdf in batches:
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy()
-            n = emb.shape[0]
-            codes_i = _pq_encode_np(emb, ci)
-            codes_o = _pq_encode_np(emb[:, pm], co)
-            diffs = emb[:, None, :] - qmat[None, :, :]
-            exact = (
-                np.floor(diffs * diffs * float(PQ_SCALE))
-                .astype(np.int64)
-                .sum(axis=2)
-            )
-            adc_i = np.zeros((n, len(qids)), dtype=np.int64)
-            adc_o = np.zeros((n, len(qids)), dtype=np.int64)
-            for s in range(PQ_SUBVECTORS):
-                adc_i += ti[:, s, :][:, codes_i[:, s]].T
-                adc_o += to[:, s, :][:, codes_o[:, s]].T
-            frames = []
-            for metric, d in (
-                ("exact", exact),
-                ("identity", adc_i),
-                ("opq", adc_o),
-            ):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vid, len(qids)),
-                            "qid": np.tile(qids, n),
-                            "metric": metric,
-                            "d": d.reshape(-1),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = (
-        spread(fx.select("vec_id", "embedding"))
-        .mapInPandas(
-            score, "vec_id bigint, qid bigint, metric string, d bigint"
-        )
-        .where(F.col("vec_id") != F.col("qid"))
-    )
-    topk = salted_topk(
-        scored,
-        ["qid", "metric"],
-        [F.asc("d"), F.col("vec_id")],
-        PQ_RQ_K,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "identity").alias("in_id"),
-            F.max(F.col("metric") == "opq").alias("in_opq"),
-        )
-        .where("in_exact")
-    )
-    return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("in_id").cast("bigint")).alias("n_hits_identity"),
-            F.sum(F.col("in_opq").cast("bigint")).alias("n_hits_opq"),
-            (
-                F.sum(F.col("in_id").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_identity"),
-            (
-                F.sum(F.col("in_opq").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_opq"),
-        )
-        .orderBy("qid")
-    )
+    return _stacked_recall(scored, F.asc("d"), PQ_RQ_K, ["identity", "opq"])
 
 
 # ---------------------------------------------------------------------------

@@ -170,6 +170,13 @@ def register(
 # driver-re-certified (near_dup_pairs_minhash, benchmark_decontamination,
 # versioned_dml_lifecycle, versioned_change_feed, customer_cdc_merge),
 # plus the 20 oldest-vintage greens (r7-r9) as the REVERIFY queue.
+#
+# Since then: routing the similarity recall gates through the shared
+# top-k overlap helpers (_cosine_topk, _overlap_recall, _stacked_recall,
+# _pq_eval_queries, _pq_adc_scored) drifted six pins, removed and
+# re-queued here: sq8_retrieval_recall, ivf_trained_recall,
+# ivf_pq_nprobe_recall_curve and the three pq_recall_* gates. The window
+# stays at 50 by deferring six REVERIFY names (see WINDOW_DEFER).
 DRIVER_VERIFIED: dict[str, str] = {
     "ann_index_cdc_upsert_txn": "50720d82def7",
     "ann_index_streamed": "d75893debb1f",
@@ -242,10 +249,8 @@ DRIVER_VERIFIED: dict[str, str] = {
     "incremental_decontamination": "39f012d36133",
     "incremental_near_dup": "17cf16026932",
     "ips_policy_value": "358a89893114",
-    "ivf_pq_nprobe_recall_curve": "263071d2a132",
     "ivf_pq_top5": "0192c1d8f396",
     "ivf_train_distortion_curve": "7a49f9c235af",
-    "ivf_trained_recall": "d7305e99f958",
     "jaccard_prefix_filter_pairs": "8971859a16b7",
     "label_centroids": "8ae72a2f8c44",
     "label_whitening_residuals": "6be01292dd72",
@@ -287,9 +292,6 @@ DRIVER_VERIFIED: dict[str, str] = {
     "pq_code_assignment": "9874adada751",
     "pq_encode_arrow": "33967e174272",
     "pq_index_after_append": "c7406602140e",
-    "pq_recall_opq_vs_identity": "620a0dff5cc9",
-    "pq_recall_residual_vs_raw": "8b3cbcbec936",
-    "pq_recall_trained_vs_init": "c3c1e6c9f176",
     "pq_train_distortion_curve": "9cbce0cb7865",
     "prefix_cache_analysis": "0f785bb8eb7c",
     "prefix_counts_l1": "5ed63895ccac",
@@ -330,7 +332,6 @@ DRIVER_VERIFIED: dict[str, str] = {
     "source_mixture_weights": "b58728fd729d",
     "source_score_calibration": "a3afc764a9c9",
     "source_token_fertility": "7000295e1706",
-    "sq8_retrieval_recall": "47f89021d786",
     "sql_api_region_revenue": "d92bb321c9d2",
     "sum_of_squares": "d329251cd8e8",
     "supplier_lead_time_stats": "0fdddf2f0e03",
@@ -377,16 +378,25 @@ DRIVER_VERIFIED: dict[str, str] = {
 # after the rest of the unverified set (they stay gated by the local
 # oracle harness and take a slot next round). Queries added mid-round go
 # here so they don't displace the 50 already queued for driver rows.
-# Round 7: empty — new/changed queries + oldest-green re-queues fill the
-# window exactly (see the REVERIFY note).
-WINDOW_DEFER: frozenset[str] = frozenset()
+# Now: the six oldest-vintage REVERIFY names (the two r7 survivors and
+# the alphabetically-first r8 members), one per pin the recall-gate
+# helper refactor drifted, so the changed code takes their window slots.
+WINDOW_DEFER: frozenset[str] = frozenset({
+    "customer_order_gap_stats",
+    "embedding_norms_by_label",
+    "events_json_props",
+    "events_multires_rollup",
+    "q13_customer_distribution",
+    "q22_global_sales_opportunity",
+})
 
 # Round-14 refill (r13 ADVICE: restored members no longer double-listed —
 # this set now contains EXACTLY the queued-for-reverification names):
 # the 20 oldest-vintage greens (both r7 survivors, the r8 remainder, and
-# the alphabetically-first r9 members), ordered AFTER the round's
-# changed/helper-drifted queries by all_queries() so re-certification of
-# changed code always wins window slots over routine vintage rotation.
+# the alphabetically-first r9 members) less the six now in WINDOW_DEFER,
+# ordered AFTER the round's changed/helper-drifted queries by
+# all_queries() so re-certification of changed code always wins window
+# slots over routine vintage rotation.
 REVERIFY: frozenset[str] = frozenset({
     "bm25_stats_streamed",
     "bpe_pair_counts",
@@ -394,10 +404,6 @@ REVERIFY: frozenset[str] = frozenset({
     "cdf_incremental_state_counts",
     "cdf_netting_across_versions",
     "corpus_after_span_strip",
-    "customer_order_gap_stats",
-    "embedding_norms_by_label",
-    "events_json_props",
-    "events_multires_rollup",
     "events_session_windows",
     "events_sliding_10min_5min",
     "events_tumbling_5min",
@@ -405,8 +411,6 @@ REVERIFY: frozenset[str] = frozenset({
     "kmeans_assign_update",
     "lineitem_measures_unpivot",
     "lineitem_profile",
-    "q13_customer_distribution",
-    "q22_global_sales_opportunity",
     "user_value_resample_1h_ffill",
 })
 

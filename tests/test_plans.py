@@ -768,11 +768,27 @@ def test_change_feed_reads_are_joinless(spark, plan, tmp_path):
     assert feed.count() == 100 + 10 + 1  # v1 inserts + 5 pre/post pairs + delete
 
 
-def test_ivf_trained_recall_no_cartesian(spark, plan):
-    """r9: the IVF training eval must stay broadcast-joined throughout —
-    centroid/probe relations are K- and NQ-bounded, so a CartesianProduct
-    anywhere means a bounded side lost its broadcast and the eval would
-    cross-product the corpus at scale. (The intentional corpus x queries
-    scoring join is itself a broadcast of the 8-row query relation.)"""
-    p = plan("ivf_trained_recall", spark)
+RECALL_GATES = [
+    "knn_recall_at_3",
+    "knn_ivfpq_recall_at_3",
+    "knn_ivfpq_filtered_recall",
+    "sq8_retrieval_recall",
+    "ivf_trained_recall",
+    "ann_truncated_dim_recall",
+    "pq_recall_trained_vs_init",
+    "pq_recall_residual_vs_raw",
+    "pq_recall_opq_vs_identity",
+    "ivf_pq_nprobe_recall_curve",
+]
+
+
+@pytest.mark.parametrize("name", RECALL_GATES)
+def test_ivf_trained_recall_no_cartesian(spark, plan, name):
+    """r9: the recall gates must stay broadcast-joined throughout — query
+    samples, centroid and probe relations are bounded, so a
+    CartesianProduct anywhere means a bounded side lost its broadcast and
+    the gate would cross-product the corpus at scale. (The intentional
+    corpus x queries scoring join is itself a broadcast of the bounded
+    query relation.)"""
+    p = plan(name, spark)
     assert "CartesianProduct" not in p
