@@ -44,10 +44,12 @@ ABSOLUTE floor tier (r13 verdict item 1): the relative spread gate is
 blind to UNIFORM interference (the r13 driver run passed at ratio 1.262
 with every probe at ~2x the committed floor). ``calibration_floor_sec``
 (min of the three probes) is therefore compared against the best floor
-in the committed BENCH_r*.json history; a run whose quietest probe
+in the committed BENCH_r*.json history for the run's core class
+(``cpus``, recorded in the artifact); a run whose quietest probe
 exceeds 1.5x that floor is flagged ``degraded_absolute`` (advisory —
 a slower box class still yields valid same-box A/Bs, but the artifact
-says so, and ``machine_slowdown_vs_committed`` quantifies it).
+says so, and ``machine_slowdown_vs_committed`` quantifies it). A core
+class with no committed floor gets no absolute verdict (null slowdown).
 """
 
 from __future__ import annotations
@@ -97,10 +99,13 @@ DEGRADED_RATIO = 1.25
 #
 # The reference floor is the best committed probe AT THE SAME CORE
 # COUNT CLASS: the calibration kernel is spark.range(30M), whose task
-# layout follows local[N] parallelism, so the 8-core floor (0.057,
-# BENCH_r13_c8) is not comparable to 32-core runs. 0.068 is the r12
-# driver's 32-core end probe — the best committed 32-core floor.
-BEST_COMMITTED_FLOOR = 0.068  # best committed 32-core probe (BENCH_r12)
+# layout follows local[N] parallelism, so the 8-core floor is not
+# comparable to 32-core runs. Keyed by local[N] parallelism; a class
+# missing here has no committed floor and skips the absolute tier.
+BEST_COMMITTED_FLOOR = {
+    32: 0.068,  # BENCH_r12 end probe
+    8: 0.057,  # BENCH_r13_c8 end probe
+}
 ABSOLUTE_FLOOR_FACTOR = 1.5
 
 
@@ -144,6 +149,7 @@ def main():
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism  # N of local[N]
 
     from otus_cpp_11_spark.queries.bpe import release_bpe_caches
     from otus_cpp_11_spark.queries.dedup import release_dedup_caches
@@ -272,8 +278,8 @@ def main():
         # committed floor, the whole run carries machine inflation that
         # the relative gate cannot see (uniform contention).
         floor = min(probes)
-        slowdown = floor / BEST_COMMITTED_FLOOR
-        degraded_absolute = floor > ABSOLUTE_FLOOR_FACTOR * BEST_COMMITTED_FLOOR
+        ref = BEST_COMMITTED_FLOOR.get(cpus)
+        degraded_absolute = ref is not None and floor > ABSOLUTE_FLOOR_FACTOR * ref
         return {
             "metric": "headline_queries_total",
             "value": round(sum(timings.values()), 3),
@@ -285,7 +291,8 @@ def main():
             "calibration_end_sec": calibration_end,
             "calibration_ratio": round(ratio, 3),
             "calibration_floor_sec": round(floor, 3),
-            "machine_slowdown_vs_committed": round(slowdown, 2),
+            "cpus": cpus,
+            "machine_slowdown_vs_committed": round(floor / ref, 2) if ref else None,
             "degraded_absolute": degraded_absolute,
             "degraded_relative": ratio > DEGRADED_RATIO,
             "contaminated": ratio > CONTAMINATION_RATIO,

@@ -19,6 +19,8 @@ import logging
 import sys
 from pathlib import Path
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
@@ -47,10 +49,25 @@ def main(argv: list[str] | None = None) -> int:
     )
     log = logging.getLogger("otus_cpp_11_spark.cli")
 
-    from otus_cpp_11_spark.prefix import min_unique_prefix_length
+    from pyspark.sql import SparkSession
+
     from otus_cpp_11_spark.session import get_spark
 
+    # get_spark on a live session re-applies shuffle_partitions = R to it
+    # through getOrCreate; hand the caller's session back as it came
+    live = SparkSession.getActiveSession()
+    prior = live.conf.get(_SHUFFLE) if live is not None else None
     spark = get_spark(app_name="prefix-cli", shuffle_partitions=args.reducers)
+    try:
+        return _run(spark, args, log)
+    finally:
+        if prior is not None:
+            spark.conf.set(_SHUFFLE, prior)
+
+
+def _run(spark, args: argparse.Namespace, log: logging.Logger) -> int:
+    from otus_cpp_11_spark.prefix import min_unique_prefix_length
+
     if not args.debug:
         spark.sparkContext.setLogLevel("ERROR")
     lines = spark.read.text(args.input).repartition(args.mappers)

@@ -16,7 +16,8 @@ def _restore_shuffle_partitions(spark):
     reference's reducer count); under getOrCreate that retunes the SHARED
     test session, and R=2 would leak into every later test (it broke the
     skew-split plan test: with 2 partitions the skew detector's median IS
-    the hot partition). Snapshot and restore."""
+    the hot partition). main now restores the caller's value itself; this
+    snapshot/restore stays as the backstop."""
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     yield
     spark.conf.set("spark.sql.shuffle.partitions", prior)
@@ -43,3 +44,13 @@ def test_cli_duplicate_lines_exit_code(spark, tmp_path, capsys):
     rc = main(["-i", str(f)])
     assert rc == 1
     assert "not found" in capsys.readouterr().out
+
+
+def test_cli_main_leaves_caller_shuffle_partitions(spark, tmp_path, capsys):
+    f = tmp_path / "lines.txt"
+    f.write_text("ab\ncd\n")
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    reducers = str(int(prior) + 3)
+    assert main(["-i", str(f), "-r", reducers]) == 0
+    assert "Result = 1" in capsys.readouterr().out
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
