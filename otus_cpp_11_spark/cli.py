@@ -36,7 +36,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--max-len",
         type=int,
         default=None,
-        help="search cap (reference hard-codes 3, src/main.cpp:61; default: longest line)",
+        help="search cap (reference hard-codes 3, src/main.cpp:61; default: none)",
     )
     return p
 
@@ -73,25 +73,20 @@ def _run(spark, args: argparse.Namespace, log: logging.Logger) -> int:
     lines = spark.read.text(args.input).repartition(args.mappers)
     log.debug("input=%s mappers=%d reducers=%d", args.input, args.mappers, args.reducers)
 
-    found: list[int] = []
+    on_iter = None
     if args.out:
         outdir = Path(args.out)
 
-        def _on_iter(length: int, unique: bool) -> None:
+        def on_iter(length: int, unique: bool) -> None:
             d = outdir / f"iter{length}"
             d.mkdir(parents=True, exist_ok=True)
             (d / "result.txt").write_text(f"{int(unique)}\n")
-            if unique:
-                found.append(length)
 
-        result = min_unique_prefix_length(
-            spark, lines, max_len=args.max_len, on_iteration=_on_iter
-        )
-    else:
-        result = min_unique_prefix_length(spark, lines, max_len=args.max_len)
-
+    result = min_unique_prefix_length(
+        spark, lines, max_len=args.max_len, on_iteration=on_iter
+    )
     if result is None:
-        print("Result = not found (duplicate lines)")
+        print("Result = not found (duplicate lines, or longer than --max-len)")
         return 1
     print(f"Result = {result}")
     return 0

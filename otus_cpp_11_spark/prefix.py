@@ -1,43 +1,45 @@
 """The reference's flagship query: minimal prefix length that uniquely
 identifies every line of a text dataset.
 
-Reference behavior (/root/reference/src/main.cpp:59-99): loop L = 1, 2, 3;
-each iteration runs a full MapReduce job whose mapper emits
+Reference behavior (reference src/main.cpp:59-99): loop L = 1, 2, 3; each
+iteration runs a full MapReduce job whose mapper emits
 ``(line.substr(0, L), 1)`` (main.cpp:62-74) and whose reducer votes false on
 any adjacent duplicate key in the sorted stream (main.cpp:75-91); stop at the
 first L where every prefix is unique. Semantic quirks we deliberately fix
-(SURVEY.md §2.3): the L < 4 cap becomes a parameter defaulting to the longest
-line; identical full lines are reported as "no answer" (None) instead of the
-cap value.
+(SURVEY.md §2.3): the L < 4 cap becomes an optional parameter; identical
+full lines are reported as "no answer" (None) instead of the cap value; NULL
+lines are ignored.
 
-Spark-first design — two strategies, both built on ``groupBy`` (the sorted
-adjacency + key co-location contract of the reference shuffle,
-description/homework/mapreduce.h:41-44, is exactly what a hash aggregate
-guarantees for free):
+One strategy: one sort answers every L. Prefixes of length L collide iff
+two lines share their first L characters (a line shorter than L is its own
+prefix and can only equal an identical line). In sorted order the longest
+common prefix (LCP) of any two lines is the shortest LCP of the adjacent
+pairs between them, so for distinct lines the answer is 1 + the max LCP of
+sorted neighbours; equal neighbours mean duplicate full lines (NULL), and
+no non-empty line means no L exists (NULL). Spark sorts UTF-8 bytes, which
+orders strings exactly as code points do; the LCP counts code points, as
+``substring`` does.
 
-* ``iterative``  — the reference's own loop shape. One Spark job per L over a
-  cached input; each job is a partial-aggregated groupBy + short-circuit
-  existence check (``cnt > 1 LIMIT 1``), so per-iteration shuffle traffic is
-  small (distinct prefixes only, map-side combined). Scales to 100 TB: the
-  cache is the only full materialization and each pass is embarrassingly
-  parallel.
-* ``single_pass`` — impossible in the reference's model, trivial in SQL:
-  explode every row into (L, prefix) for L = 1..len(line) and aggregate once.
-  Shuffle volume is O(rows * avg_len) — right when line width is bounded
-  (keys, ids), wrong for long documents; callers pick.
+The plan is the reference's own sort, spread out:
 
-Note the single-pass explodes each line only to its *own* length, not the
-global max — shuffle volume stays proportional to data size, not data size x
-global max length. This is sound because at any L, a line shorter than L
-contributes its full text as its prefix, which can only compare equal to
-another prefix string of the same (sub-L) length — i.e. to another short
-line's *identical* full text. That is precisely the duplicate-full-line case,
-which is handled by an explicit (cheap) duplicate guard: when any full line
-occurs twice the answer is NULL regardless of L.
+* **sort** — ``repartitionByRange`` with no fixed partition count (AQE
+  coalesces the ranges; a fixed wide split costs more than it saves on
+  small inputs), then ``sortWithinPartitions``. The shuffle carries each
+  line once: O(rows), not O(rows x length).
+* **fold** — a ``mapInArrow`` scan per partition emits (first line, last
+  line, max adjacent LCP, equal-neighbour flag).
+* **stitch** — ``repartition(1)`` and one more ``mapInArrow`` compare each
+  partition's last line with the next one's first (the reference's
+  ``align_blocks``) and render the answer.
+
+The fold is interpreted Python, one slice compare per row: about 2 us per
+short line on one core (0.38 s for 200k email-like lines), the per-row
+cost to watch at scale. The range sample is one more small job.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,90 +62,86 @@ def has_duplicate_prefix(df: DataFrame, col: str, length: int) -> bool:
     return prefix_counts(df, col, length).where(F.col("cnt") > 1).limit(1).count() > 0
 
 
+def _lcp(a: str, b: str) -> int:
+    """Length of the longest common prefix, in code points."""
+    n = 0
+    for x, y in zip(a, b):
+        if x != y:
+            break
+        n += 1
+    return n
+
+
+def _fold_sorted(batches):
+    """One partition's sorted lines -> one row (first, last, max adjacent
+    LCP, any equal neighbours); an empty partition emits nothing."""
+    first = prev = None
+    best, dup = 0, False
+    for batch in batches:
+        for line in batch.column(0).to_pylist():
+            if prev is None:
+                first = line
+            elif line[: best + 1] == prev[: best + 1]:
+                # only a neighbour sharing more than ``best`` chars moves it
+                dup = dup or line == prev
+                best = max(best, _lcp(prev, line))
+            prev = line
+    if prev is not None:
+        yield pa.RecordBatch.from_pylist(
+            [{"first": first, "last": prev, "max_lcp": best, "dup": dup}]
+        )
+
+
+def _stitch(batches):
+    """Every partition's fold row -> the one-row answer. Range partitions
+    hold disjoint ordered ranges, so sorting the rows by first line restores
+    partition order; each boundary is then one more neighbour pair."""
+    parts = sorted((r for b in batches for r in b.to_pylist()), key=lambda r: r["first"])
+    dup = any(r["dup"] for r in parts)
+    best = max((r["max_lcp"] for r in parts), default=0)
+    for left, right in zip(parts, parts[1:]):
+        dup = dup or left["last"] == right["first"]
+        best = max(best, _lcp(left["last"], right["first"]))
+    answer = None if dup or not parts or parts[-1]["last"] == "" else best + 1
+    yield pa.RecordBatch.from_pydict({"min_unique_prefix_len": pa.array([answer], pa.int64())})
+
+
+def min_unique_prefix_length_single_pass(df: DataFrame, col: str = "value") -> DataFrame:
+    """Lazy one-row DataFrame ``[min_unique_prefix_len: bigint]`` (NULL = no
+    unique prefix exists: duplicate full lines, or no non-empty line).
+    NULL lines are ignored."""
+    lines = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
+    folded = (
+        lines.repartitionByRange("v")
+        .sortWithinPartitions("v")
+        .mapInArrow(_fold_sorted, "first string, last string, max_lcp bigint, dup boolean")
+    )
+    return folded.repartition(1).mapInArrow(_stitch, "min_unique_prefix_len bigint")
+
+
 def min_unique_prefix_length(
     spark: SparkSession,
     df: DataFrame,
     col: str = "value",
     max_len: int | None = None,
-    cache: bool = True,
     on_iteration=None,
 ) -> int | None:
-    """Iterative driver loop, reference shape (src/main.cpp:61-99) minus the
-    hard L<4 cap. Returns None when no unique prefix exists (duplicate full
-    lines — SURVEY.md §2.3.5/§2.3.7).
+    """The reference's driver loop (src/main.cpp:61-99), answered by one run
+    of the single-pass plan: None when no unique prefix exists (duplicate
+    full lines — SURVEY.md §2.3.5/§2.3.7) or when it exceeds ``max_len``.
 
-    The input is cached once and reused across iterations (the reference
-    re-reads the input file every pass; Spark lets us not).
-
-    ``on_iteration(length, unique)`` is called after each pass — the CLI
-    uses it to mirror the reference's per-iteration ``iter{L}/result.txt``
-    output layout (src/runner.cpp:65).
-    """
-    if max_len is None:
-        max_len = df.agg(F.max(F.length(F.col(col)))).first()[0] or 0
-    if max_len == 0:
+    ``on_iteration(length, unique)`` replays the loop's verdicts for
+    L = 1..answer (capped at ``max_len``); uniqueness is monotone in L, so
+    the answer decides each. The CLI writes the reference's per-iteration
+    ``iter{L}/result.txt`` layout with it (src/runner.cpp:65)."""
+    # collect, not first(): a LIMIT stops reading the stitch's Python worker,
+    # so Spark drops it and the next Arrow task pays a fresh worker's
+    # pyarrow + pandas import (~0.5 s)
+    answer = min_unique_prefix_length_single_pass(df, col).collect()[0][0]
+    if answer is None:
         return None
-    if cache:
-        df = df.cache()
-    try:
-        # A duplicate at max_len means duplicate full lines: no L can succeed.
-        if has_duplicate_prefix(df, col, max_len):
-            return None
-        for length in range(1, max_len + 1):
-            unique = not has_duplicate_prefix(df, col, length)
-            if on_iteration is not None:
-                on_iteration(length, unique)
-            if unique:
-                return length
-        return max_len
-    finally:
-        if cache:
-            df.unpersist()
-
-
-def prefix_uniqueness_by_length(df: DataFrame, col: str = "value") -> DataFrame:
-    """Single-pass per-L verdict table: ``[L, max_count]`` where
-    ``max_count == 1`` marks lengths at which all prefixes are unique.
-
-    Empty lines are filtered before the explode (Spark's ``sequence(1, 0)``
-    would otherwise emit a descending [1, 0]); an empty line's prefix ""
-    can only collide with another empty line — the duplicate-full-line case
-    the caller's guard handles.
-    """
-    exploded = (
-        df.where(F.length(F.col(col)) >= 1)
-        .select(
-            F.col(col).alias("_line"),
-            F.explode(F.sequence(F.lit(1), F.length(F.col(col)))).alias("L"),
-        )
-        .select("L", F.expr("substring(_line, 1, L)").alias("prefix"))
-    )
-    return (
-        exploded.groupBy("L", "prefix")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("L")
-        .agg(F.max("cnt").alias("max_count"))
-    )
-
-
-def min_unique_prefix_length_single_pass(
-    df: DataFrame, col: str = "value"
-) -> DataFrame:
-    """One-row DataFrame ``[min_unique_prefix_len: bigint]`` (NULL = no unique
-    prefix exists, i.e. duplicate full lines).
-
-    The duplicate guard (see module docstring) is a scalar aggregate cross-
-    joined in — one extra row, no extra shuffle of the exploded data.
-    """
-    per_len = prefix_uniqueness_by_length(df, col)
-    candidate = per_len.where(F.col("max_count") == 1).agg(
-        F.min("L").cast("long").alias("_cand")
-    )
-    dup_guard = df.agg(
-        (F.count(F.col(col)) > F.count_distinct(F.col(col))).alias("_has_dups")
-    )
-    return candidate.crossJoin(dup_guard).select(
-        F.when(F.col("_has_dups"), F.lit(None).cast("long"))
-        .otherwise(F.col("_cand"))
-        .alias("min_unique_prefix_len")
-    )
+    last = answer if max_len is None else min(answer, max_len)
+    if on_iteration is not None:
+        for length in range(1, last + 1):
+            on_iteration(length, length == answer)
+    return answer if answer == last else None

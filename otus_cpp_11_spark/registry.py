@@ -49,9 +49,15 @@ def _helper_closure_sources(fn) -> list[str]:
     of a shared helper (`_read_files_masked`, `_knn_ivfpq_ranked`,
     `_bm25_scores`, ...) shipped without drifting any consumer's pin;
     now a helper-source change mechanically invalidates every consumer.
-    Remaining (documented) gap: module-level CONSTANTS and non-function
-    objects a helper reads are not hashed — but every registered oracle
-    renders its constants into the oracle text, which is hashed."""
+    Known gaps, none of them hashed:
+    - module-level CONSTANTS and other non-function objects a helper
+      reads (every registered oracle renders its constants into the
+      oracle text, which is hashed);
+    - package CLASSES a helper uses, and their methods;
+    - functions reached by module-attribute access (``mod.fn`` after
+      ``import mod``) rather than by bare name.
+    Widening the walk to them would drift unrelated pins, so an edit
+    there must unpin its consumers by hand."""
     import ast
     import importlib
     import inspect
@@ -176,7 +182,9 @@ def register(
 # _pq_eval_queries, _pq_adc_scored) drifted six pins, removed and
 # re-queued here: sq8_retrieval_recall, ivf_trained_recall,
 # ivf_pq_nprobe_recall_curve and the three pq_recall_* gates. The window
-# stays at 50 by deferring six REVERIFY names (see WINDOW_DEFER).
+# stays at 50 by deferring six REVERIFY names (see WINDOW_DEFER). The
+# sorted-fold rewrite of the prefix query then drifted
+# prefix_min_unique_len, re-queued the same way (one more defer).
 DRIVER_VERIFIED: dict[str, str] = {
     "ann_index_cdc_upsert_txn": "50720d82def7",
     "ann_index_streamed": "d75893debb1f",
@@ -295,7 +303,6 @@ DRIVER_VERIFIED: dict[str, str] = {
     "pq_train_distortion_curve": "9cbce0cb7865",
     "prefix_cache_analysis": "0f785bb8eb7c",
     "prefix_counts_l1": "5ed63895ccac",
-    "prefix_min_unique_len": "379d84a2fa25",
     "purchase_prior_click_asof": "8aaf9d992d96",
     "python_datasource_checksum": "f2d44ec97ec3",
     "python_datasource_stream_checksum": "79689d0b6458",
@@ -378,14 +385,16 @@ DRIVER_VERIFIED: dict[str, str] = {
 # after the rest of the unverified set (they stay gated by the local
 # oracle harness and take a slot next round). Queries added mid-round go
 # here so they don't displace the 50 already queued for driver rows.
-# Now: the six oldest-vintage REVERIFY names (the two r7 survivors and
+# Now: the seven oldest-vintage REVERIFY names (the two r7 survivors and
 # the alphabetically-first r8 members), one per pin the recall-gate
-# helper refactor drifted, so the changed code takes their window slots.
+# helper refactor and the prefix rewrite drifted, so the changed code
+# takes their window slots.
 WINDOW_DEFER: frozenset[str] = frozenset({
     "customer_order_gap_stats",
     "embedding_norms_by_label",
     "events_json_props",
     "events_multires_rollup",
+    "events_session_windows",
     "q13_customer_distribution",
     "q22_global_sales_opportunity",
 })
@@ -393,7 +402,7 @@ WINDOW_DEFER: frozenset[str] = frozenset({
 # Round-14 refill (r13 ADVICE: restored members no longer double-listed —
 # this set now contains EXACTLY the queued-for-reverification names):
 # the 20 oldest-vintage greens (both r7 survivors, the r8 remainder, and
-# the alphabetically-first r9 members) less the six now in WINDOW_DEFER,
+# the alphabetically-first r9 members) less the seven now in WINDOW_DEFER,
 # ordered AFTER the round's changed/helper-drifted queries by
 # all_queries() so re-certification of changed code always wins window
 # slots over routine vintage rotation.
@@ -404,7 +413,6 @@ REVERIFY: frozenset[str] = frozenset({
     "cdf_incremental_state_counts",
     "cdf_netting_across_versions",
     "corpus_after_span_strip",
-    "events_session_windows",
     "events_sliding_10min_5min",
     "events_tumbling_5min",
     "events_user_sketches",

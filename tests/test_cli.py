@@ -38,6 +38,21 @@ def test_cli_golden_result_and_iter_layout(spark, tmp_path, capsys):
     assert (out / "iter2" / "result.txt").read_text() == "1\n"
 
 
+def test_cli_iter_layout_stops_at_answer(spark, tmp_path, capsys):
+    f = tmp_path / "lines.txt"
+    # "carrot" / "carton" share "car": the answer is 4
+    f.write_text("apple\ncarrot\ncarton\nbanana\n")
+    out = tmp_path / "out"
+    assert main(["-i", str(f), "--out", str(out)]) == 0
+    assert "Result = 4" in capsys.readouterr().out
+    for length in (1, 2, 3):
+        assert (out / f"iter{length}" / "result.txt").read_text() == "0\n"
+    assert (out / "iter4" / "result.txt").read_text() == "1\n"
+    assert not (out / "iter5").exists()
+    assert main(["-i", str(f), "--max-len", "3"]) == 1
+    assert "not found" in capsys.readouterr().out
+
+
 def test_cli_duplicate_lines_exit_code(spark, tmp_path, capsys):
     f = tmp_path / "dups.txt"
     f.write_text("same\nsame\nother\n")

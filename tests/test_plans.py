@@ -8,6 +8,7 @@ row-level oracle checks."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 
 from otus_cpp_11_spark.registry import all_queries
 
@@ -19,18 +20,25 @@ def _explain(df) -> str:
     return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
 
 
-def _parquet_scans(df) -> int:
-    """Parquet scan nodes in the executed plan, subquery plans included."""
-    stack, n = [df._jdf.queryExecution().executedPlan()], 0
+def _plan_nodes(root):
+    """Nodes of an executed plan (a DataFrame's, or a subtree of one),
+    through AQE wrappers and into subquery plans."""
+    if isinstance(root, DataFrame):
+        root = root._jdf.queryExecution().executedPlan()
+    stack = [root]
     while stack:
         node = stack.pop()
         if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
             stack.append(node.executedPlan())
             continue
-        n += node.nodeName().startswith("Scan parquet")
+        yield node
         for seq in (node.children(), node.subqueries()):
             stack.extend(seq.apply(i) for i in range(seq.size()))
-    return n
+
+
+def _parquet_scans(df) -> int:
+    """Parquet scan nodes in the executed plan, subquery plans included."""
+    return sum(n.nodeName().startswith("Scan parquet") for n in _plan_nodes(df))
 
 
 @pytest.fixture(scope="module")
@@ -106,6 +114,22 @@ def test_q18_semi_join_is_broadcast(spark, plan):
     p = plan("q18_large_orders", spark)
     assert "LeftSemi" in p
     assert "SortMergeJoin" not in p
+
+
+def test_prefix_min_unique_len_is_one_range_sort_of_the_lines(spark):
+    df = all_queries()["prefix_min_unique_len"].fn(spark, SF)
+    nodes = list(_plan_nodes(df))
+    assert _parquet_scans(df) == 1
+    # no per-character explode: each line is shuffled once, by range
+    assert not [n for n in nodes if n.nodeName() == "Generate"]
+    ranges = [
+        n
+        for n in nodes
+        if n.nodeName() == "Exchange"
+        and n.outputPartitioning().getClass().getSimpleName() == "RangePartitioning"
+    ]
+    assert len(ranges) == 1
+    assert _parquet_scans(ranges[0]) == 1
 
 
 def test_prefix_counts_aggregate_pushes_partial(spark, plan):

@@ -67,8 +67,45 @@ class TestAdversarial:
         assert min_unique_prefix_length(spark, df) == 1
         assert single_pass_answer(df) == 1
 
+    def test_null_lines_are_ignored(self, spark):
+        # NULL is no line: neither a duplicate of another NULL nor a prefix
+        df = spark.createDataFrame([(None,), (None,), ("a",), ("b",)], "value string")
+        assert min_unique_prefix_length(spark, df) == 1
+        assert single_pass_answer(df) == 1
+
+    def test_max_len_below_answer_is_no_answer(self, spark, lines_numbers69):
+        seen = []
+        got = min_unique_prefix_length(
+            spark, lines_numbers69, max_len=1, on_iteration=lambda *v: seen.append(v)
+        )
+        assert got is None
+        assert seen == [(1, False)]
+
     def test_reference_test_txt_directly(self, spark):
         """Read the actual reference fixture end-to-end via spark.read.text —
         the O1/O2 line-text source path (SURVEY.md §2 O1-O2)."""
         df = spark.read.text("/root/reference/test.txt")
         assert min_unique_prefix_length(spark, df) == 2
+
+
+def test_prefix_answer_is_config_invariant(spark):
+    """Range bounds, coalesced partitions and empty partitions move the
+    partition boundaries the stitch crosses, never the answer. With 20
+    lines and 32 unadaptive partitions nearly every neighbour pair,
+    the deepest included, straddles a boundary."""
+    lines = [f"k{i:03d}x" for i in range(0, 200, 13)] + ["k130yy", "k0", "", "zz", None]
+    df = spark.createDataFrame([(v,) for v in lines], "value string")
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prior = {k: spark.conf.get(k) for k in keys}
+    got = set()
+    try:
+        for aqe in ("true", "false"):
+            for parts in ("1", "3", "32"):
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                spark.conf.set("spark.sql.shuffle.partitions", parts)
+                got.add((aqe, parts, single_pass_answer(df)))
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    # the deepest neighbours, "k130x" and "k130yy", share 4 characters
+    assert {answer for _, _, answer in got} == {5}, sorted(got)

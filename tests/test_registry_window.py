@@ -53,3 +53,16 @@ def test_driver_verified_hashes_match_current_source():
         "impl/oracle changed since driver verification — remove these from "
         f"DRIVER_VERIFIED to re-queue them: {stale}"
     )
+
+
+def test_prefix_pin_covers_the_fold_and_stitch():
+    """The registered prefix query's answer is decided in the fold and
+    stitch helpers two calls down; editing either must drift its pin."""
+    import inspect
+
+    from otus_cpp_11_spark import prefix
+    from otus_cpp_11_spark.registry import _helper_closure_sources, all_queries
+
+    closure = _helper_closure_sources(all_queries()["prefix_min_unique_len"].fn)
+    for helper in (prefix._fold_sorted, prefix._stitch, prefix._lcp):
+        assert inspect.getsource(helper) in closure, helper.__name__
