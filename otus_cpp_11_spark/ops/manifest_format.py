@@ -55,14 +55,17 @@ the 100 TB mandate, mirroring public Delta/Iceberg designs.
 from __future__ import annotations
 
 import json
+import os
 import re
 from typing import Callable
 
 CHECKPOINT_EVERY = 8  # commits between full-state checkpoints
 DV_INLINE_MAX = 512  # deleted-row indices carried inline in the marker
 
+COMMITS = "_commits"
 MARKER_RE = re.compile(r"^(\d{8})$")
 CKPT_RE = re.compile(r"^(\d{8})\.ckpt$")
+_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
 
 def marker_name(version: int) -> str:
@@ -71,6 +74,160 @@ def marker_name(version: int) -> str:
 
 def ckpt_name(version: int) -> str:
     return f"{version:08d}.ckpt"
+
+
+def seal_name(version: int) -> str:
+    """Table-side seal of a txn-claimed version's decided verdict."""
+    return f"{version:08d}.txnseal"
+
+
+def final_name(txn_id: str) -> str:
+    """A multi-table transaction's single arbiter record, under its root."""
+    return f"txn-{txn_id}.final"
+
+
+def is_foreign(f: str) -> bool:
+    """True for a manifest entry living outside this table's root — a
+    shallow clone's by-reference file, written as an absolute path or a
+    URI (the scheme check also catches Hadoop's single-slash ``file:/x``
+    form). Foreign entries are readable but never deletable by THIS
+    table's vacuum (they belong to the source)."""
+    return f.startswith("/") or bool(_SCHEME.match(f))
+
+
+def resolve(root: str, f: str) -> str:
+    """Physical path of a manifest entry. Entries a table wrote itself
+    are root-relative (``_data/...``, relocatable); entries installed by
+    ``clone_version`` are absolute/URI paths into the SOURCE table and
+    pass through unchanged — Delta shallow clones record exactly the
+    same split."""
+    return f if is_foreign(f) else f"{root}/{f}"
+
+
+# ---------------------------------------------------------------------------
+# Plain-filesystem ``_commits`` reads. ``table`` is a local path (the
+# engine's ``_local_path`` of a table on the local FS, or the connector's
+# path option); remote stores go through the engine's Hadoop branch.
+# ---------------------------------------------------------------------------
+
+
+def _commit_path(table: str, name: str) -> str:
+    return f"{table.rstrip('/')}/{COMMITS}/{name}"
+
+
+def local_names(table: str) -> list[str]:
+    """The ``_commits`` directory listing; [] for a table never committed."""
+    try:
+        return os.listdir(f"{table.rstrip('/')}/{COMMITS}")
+    except FileNotFoundError:
+        return []
+
+
+def marker_versions(names: list[str]) -> list[int]:
+    """Committed versions in a ``_commits`` listing, ascending (staged
+    ``.tmp-*`` files, checkpoints and seals are not commits)."""
+    return sorted(int(m.group(1)) for n in names if (m := MARKER_RE.match(n)))
+
+
+def local_versions(table: str) -> list[int]:
+    return marker_versions(local_names(table))
+
+
+def _open_commit(table: str, name: str):
+    try:
+        return open(_commit_path(table, name))
+    except FileNotFoundError:
+        raise FileNotFoundError(f"{table!r}: no commit-dir file {name!r}") from None
+
+
+def local_read(table: str, name: str) -> str:
+    """Raw text of a ``_commits``-dir file (marker, checkpoint or seal);
+    FileNotFoundError when absent — the exception ``load_state``'s replay
+    contract keys on."""
+    with _open_commit(table, name) as f:
+        return f.read()
+
+
+def local_header(table: str, name: str) -> dict:
+    """RAW first-line header of a ``_commits``-dir file: one line read, no
+    transaction resolution (see ``txn_claim``)."""
+    with _open_commit(table, name) as f:
+        return json.loads(f.readline())
+
+
+def local_mtime(table: str, name: str) -> float:
+    """Modification time (epoch seconds) of a ``_commits``-dir file."""
+    return os.path.getmtime(_commit_path(table, name))
+
+
+def version_at(
+    versions: list[int],
+    header: Callable[[int], dict],
+    mtime: Callable[[int], float],
+    ts: float,
+    after: bool = False,
+) -> int | None:
+    """THE timestamp-to-version rule of every face (engine TIMESTAMP AS OF
+    and CDF bounds, connector ``timestampAsOf`` and ``startingTimestamp``):
+    a version's instant is its marker's IN-COMMIT ``commit_ts`` (monotone
+    by the write-side parent clamp, so it survives copies that perturb
+    mtimes), falling back to the marker's mtime for pre-feature markers.
+    ``after=False`` returns the LATEST version at or before ``ts`` (newest-
+    first walk); ``after=True`` the EARLIEST at or after it (oldest-first).
+    With monotone instants the first hit is the answer, so the walk reads
+    only the markers on the far side of ``ts``. None if no version
+    qualifies.
+
+    ``header(v)`` is the RAW header line: ``commit_ts`` was clamped at
+    staging and an aborted multi-table claim still holds its slot (a no-op
+    snapshot equal to its parent), so picking a version never needs — and
+    must never trigger — transaction resolution. ``versions`` ascend."""
+    for v in versions if after else reversed(versions):
+        try:
+            cts = header(v).get("commit_ts")
+        except (OSError, ValueError):
+            cts = None
+        eff = float(cts) if cts is not None else mtime(v)
+        if (eff >= ts) if after else (eff <= ts):
+            return v
+    return None
+
+
+def local_version_at(table: str, ts: float, after: bool = False) -> int | None:
+    """``version_at`` over a plain-filesystem table."""
+    return version_at(
+        local_versions(table),
+        lambda v: local_header(table, marker_name(v)),
+        lambda v: local_mtime(table, marker_name(v)),
+        ts,
+        after,
+    )
+
+
+def txn_claim(text: str) -> dict | None:
+    """Header of a marker claimed by a multi-table transaction whose
+    verdict a reader must look up, or None (no claim, or a claim already
+    rewritten as aborted). The ``txn`` field lives on the header line, so
+    a substring probe skips the JSON parse for every unclaimed marker."""
+    nl = text.find("\n")
+    if '"txn"' not in (text if nl < 0 else text[:nl]):
+        return None
+    header, _body = parse_marker(text)
+    if not header.get("txn") or header.get("txn_aborted"):
+        return None
+    return header
+
+
+def aborted_view(header: dict) -> str:
+    """Marker text of an ABORTED claim: header-only, fmt-2, zero actions =
+    carry the parent snapshot, so every replay consumer (snapshots, scans,
+    CDF, diff, streams) agrees without knowing about transactions. The
+    change-file list goes too: an aborted commit's changes never fed."""
+    header = dict(header)
+    header["txn_aborted"] = True
+    header["fmt"] = 2
+    header.pop("cdf", None)
+    return json.dumps(header, sort_keys=True) + "\n"
 
 
 def empty_state() -> dict:

@@ -80,9 +80,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from otus_cpp_11_spark.ops import manifest_format as mf
+from otus_cpp_11_spark.ops.manifest_format import is_foreign, resolve
 from otus_cpp_11_spark.ops.lakehouse import _hadoop_fs, list_data_files
 
-_COMMITS = "_commits"
+_COMMITS = mf.COMMITS
 _DATA = "_data"
 _MARKER = mf.MARKER_RE
 
@@ -137,27 +138,6 @@ def _relativize(path: str) -> str:
     return path[i + 1 :]
 
 
-_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
-
-
-def _is_foreign(f: str) -> bool:
-    """True for a manifest entry living outside this table's root — a
-    shallow clone's by-reference file, written as an absolute path or a
-    URI (the scheme check also catches Hadoop's single-slash ``file:/x``
-    form). Foreign entries are readable but never deletable by THIS
-    table's vacuum (they belong to the source)."""
-    return f.startswith("/") or bool(_SCHEME.match(f))
-
-
-def _resolve(root: str, f: str) -> str:
-    """Physical path of a manifest entry. Entries a table wrote itself
-    are root-relative (``_data/...``, relocatable); entries installed by
-    ``clone_version`` are absolute/URI paths into the SOURCE table and
-    pass through unchanged — Delta shallow clones record exactly the
-    same split."""
-    return f if _is_foreign(f) else f"{root}/{f}"
-
-
 def current_version(spark: SparkSession, table: str) -> int | None:
     """The committed version number (max commit marker), or None for a
     table with no commits. Staged ``.tmp-*`` files are not commits."""
@@ -171,23 +151,7 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
     ``vacuum_versions(drop_uncommitted=True)``. Local tables list via
     plain ``os.listdir`` (see ``_local_path``); object stores keep the
     Hadoop route."""
-    local = _local_path(table, spark)
-    if local is not None:
-        try:
-            names = os.listdir(f"{local.rstrip('/')}/{_COMMITS}")
-        except FileNotFoundError:
-            return []
-        return sorted(int(m.group(1)) for n in names if (m := _MARKER.match(n)))
-    fs, _ = _hadoop_fs(spark, table)
-    cdir = _jp(spark, table, _COMMITS)
-    if not fs.exists(cdir):
-        return []
-    out = []
-    for st in fs.listStatus(cdir):
-        m = _MARKER.match(st.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return mf.marker_versions(_commit_dir_names(spark, table))
 
 
 _DEFAULT_FS_LOCAL: "weakref.WeakKeyDictionary[SparkSession, bool]" = (
@@ -244,13 +208,7 @@ def _read_commit_text(spark: SparkSession, table: str, name: str) -> str:
     replay contract keys on."""
     local = _local_path(table, spark)
     if local is not None:
-        try:
-            with open(f"{local.rstrip('/')}/{_COMMITS}/{name}") as f:
-                return f.read()
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"{table!r}: no commit-dir file {name!r}"
-            ) from None
+        return mf.local_read(local, name)
     fs, _ = _hadoop_fs(spark, table)
     p = _jp(spark, table, _COMMITS, name)
     if not fs.exists(p):
@@ -274,29 +232,34 @@ def _read_commit_header_raw(
     back to the full fetch (the header parse still only sees line 1)."""
     local = _local_path(table, spark)
     if local is not None:
-        try:
-            with open(f"{local.rstrip('/')}/{_COMMITS}/{name}") as f:
-                return json.loads(f.readline())
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"{table!r}: no commit-dir file {name!r}"
-            ) from None
+        return mf.local_header(local, name)
     text = _read_commit_text(spark, table, name)
     return json.loads(text.splitlines()[0])
+
+
+def _commit_dir_status(spark: SparkSession, table: str) -> list:
+    """Hadoop ``FileStatus`` of every ``_commits``-dir entry (the remote-
+    store listing; local tables list through ``mf.local_names``)."""
+    fs, _ = _hadoop_fs(spark, table)
+    cdir = _jp(spark, table, _COMMITS)
+    return list(fs.listStatus(cdir)) if fs.exists(cdir) else []
 
 
 def _commit_dir_names(spark: SparkSession, table: str) -> list[str]:
     local = _local_path(table, spark)
     if local is not None:
-        try:
-            return os.listdir(f"{local.rstrip('/')}/{_COMMITS}")
-        except FileNotFoundError:
-            return []
+        return mf.local_names(local)
+    return [st.getPath().getName() for st in _commit_dir_status(spark, table)]
+
+
+def _commit_mtime(spark: SparkSession, table: str, name: str) -> float:
+    """Modification time (epoch seconds) of a ``_commits``-dir file."""
+    local = _local_path(table, spark)
+    if local is not None:
+        return mf.local_mtime(local, name)
     fs, _ = _hadoop_fs(spark, table)
-    cdir = _jp(spark, table, _COMMITS)
-    if not fs.exists(cdir):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(cdir)]
+    st = fs.getFileStatus(_jp(spark, table, _COMMITS, name))
+    return st.getModificationTime() / 1000.0
 
 
 def _load_state(spark: SparkSession, table: str, version: int) -> dict:
@@ -781,44 +744,38 @@ def drop_constraint(
     )
 
 
+def _version_at(spark: SparkSession, table: str, ts, after: bool) -> int | None:
+    """``mf.version_at`` over this table's log: local tables read it
+    through plain file IO, remote stores through one Hadoop listing
+    (which carries every marker's mtime) plus raw header reads."""
+    epoch = ts.timestamp() if hasattr(ts, "timestamp") else float(ts)
+    local = _local_path(table, spark)
+    if local is not None:
+        return mf.local_version_at(local, epoch, after)
+    mtimes = {
+        int(m.group(1)): st.getModificationTime() / 1000.0
+        for st in _commit_dir_status(spark, table)
+        if (m := _MARKER.match(st.getPath().getName()))
+    }
+    return mf.version_at(
+        sorted(mtimes),
+        lambda v: _read_commit_header_raw(spark, table, mf.marker_name(v)),
+        mtimes.__getitem__,
+        epoch,
+        after,
+    )
+
+
 def version_at_timestamp(spark: SparkSession, table: str, ts) -> int:
     """Latest version committed at or before ``ts`` — Delta's
-    ``TIMESTAMP AS OF`` resolution, IN-COMMIT-TIMESTAMP first (r12,
-    Delta's inCommitTimestamps): a marker's own ``commit_ts`` header
-    field is the commit instant, written monotone by ``_commit``'s
-    parent clamp, so time travel survives file copies / backups /
-    restores that perturb mtimes. Markers from before the feature fall
-    back to their modification time (the old rule: the marker's atomic
-    rename IS the commit instant). Resolution walks versions NEWEST
-    first and returns the first one at-or-before the target — with
-    monotone timestamps that is exactly the latest qualifying version,
-    and the walk reads only the markers NEWER than the target (one
-    header line each; ts=now reads one). ``ts`` is epoch seconds
-    (int/float) or a ``datetime``. Raises if the earliest commit is
-    newer."""
-    epoch = ts.timestamp() if hasattr(ts, "timestamp") else float(ts)
-    fs, _ = _hadoop_fs(spark, table)
-    cdir = _jp(spark, table, _COMMITS)
-    mtimes: dict[int, float] = {}
-    if fs.exists(cdir):
-        for st in fs.listStatus(cdir):
-            m = _MARKER.match(st.getPath().getName())
-            if m:
-                mtimes[int(m.group(1))] = st.getModificationTime() / 1000.0
-    for v in sorted(mtimes, reverse=True):
-        try:
-            # raw first-line read (r12 advice): commit_ts lives on the
-            # header line and a txn claim cannot falsify it — an aborted
-            # claim is still a version (a no-op snapshot equal to its
-            # parent), so resolution is not needed to pick a version
-            cts = _read_commit_header_raw(
-                spark, table, mf.marker_name(v)
-            ).get("commit_ts")
-        except FileNotFoundError:
-            cts = None
-        eff = float(cts) if cts is not None else mtimes[v]
-        if eff <= epoch:
-            return v
+    ``TIMESTAMP AS OF`` resolution, IN-COMMIT-TIMESTAMP first (Delta's
+    inCommitTimestamps; pre-feature markers fall back to their mtime —
+    the rule lives in ``mf.version_at``, shared with the connector).
+    ``ts`` is epoch seconds (int/float) or a ``datetime``. Raises if the
+    earliest commit is newer."""
+    v = _version_at(spark, table, ts, after=False)
+    if v is not None:
+        return v
     raise FileNotFoundError(
         f"versioned table {table!r} has no commit at or before "
         f"timestamp {ts!r} (earliest commit is newer, or no commits)"
@@ -843,7 +800,7 @@ def clone_version(
 
     Two contracts carried over from Delta verbatim: the clone's vacuum
     NEVER deletes by-reference source files (they are the source's to
-    reclaim — ``_is_foreign`` guards the delete loop), and a vacuum of
+    reclaim — ``is_foreign`` guards the delete loop), and a vacuum of
     the SOURCE that drops the cloned-from version CAN break the clone's
     by-reference reads — pin source retention past the clone's horizon,
     or compact the clone to localize it. Stats and row counts ride
@@ -855,12 +812,12 @@ def clone_version(
     header, files = read_manifest(spark, src, v)
     schema = StructType.fromJson(json.loads(header["schema"]))
     src_root = src.rstrip("/")
-    if not _is_foreign(src_root):
+    if not is_foreign(src_root):
         # a RELATIVE source root would make the recorded references
         # resolve against the CLONE's root (and look clone-local to its
         # vacuum) — anchor them before they enter the manifest
         src_root = os.path.abspath(src_root)
-    abs_files = [_resolve(src_root, f) for f in files]
+    abs_files = [resolve(src_root, f) for f in files]
     remap = dict(zip(files, abs_files))
     stats = {remap[f]: s for f, s in manifest_stats(header).items() if f in remap}
     rows = {remap[f]: n for f, n in manifest_rows(header).items() if f in remap}
@@ -868,7 +825,7 @@ def clone_version(
     # is anchored to the source root too (the sidecar is source data the
     # clone references — the same by-reference contract as data files)
     dvs = {
-        remap[f]: (dv if "i" in dv else {**dv, "p": _resolve(src_root, dv["p"])})
+        remap[f]: (dv if "i" in dv else {**dv, "p": resolve(src_root, dv["p"])})
         for f, dv in manifest_dvs(header).items()
         if f in remap
     }
@@ -1016,7 +973,7 @@ def _rewrite_matching_files(
         # per-file LIVE matched counts (existing DV positions masked) —
         # one column-pruned scan of the touched files, collect bounded
         # by the file count
-        by_suffix = {_relativize(_resolve(root, f)): f for f in touched}
+        by_suffix = {_relativize(resolve(root, f)): f for f in touched}
         per = (
             _read_files_masked(
                 spark, table, schema, sorted(touched), prev_dvs,
@@ -1592,7 +1549,7 @@ def _collect_file_blooms(
     files only, paid only when bloom columns are declared."""
     if not bcols or not files:
         return {}
-    df = spark.read.parquet(*[_resolve(root, f) for f in files])
+    df = spark.read.parquet(*[resolve(root, f) for f in files])
     # TYPE GATE (self-review r11): membership hashes the value's
     # canonical string, and only int/string values have one string form
     # in both the JVM (CAST AS STRING) and the Python probe (str()).
@@ -1731,7 +1688,7 @@ def _footer_stats(
     out: dict = {}
     for f in files:
         try:
-            md = pq.ParquetFile(_resolve(root, f)).metadata
+            md = pq.ParquetFile(resolve(root, f)).metadata
         except Exception:
             return None
         names = {md.schema.column(i).name: i for i in range(md.num_columns)}
@@ -1756,7 +1713,7 @@ def _footer_stats(
             if mn is None:
                 return None  # zero row groups: let the scan decide
             entry[c] = [_stats_safe(mn), _stats_safe(mx)]
-        out[_relativize(_resolve(root, f))] = entry
+        out[_relativize(resolve(root, f))] = entry
     return out
 
 
@@ -1793,7 +1750,7 @@ def _collect_file_stats(
         fs = _footer_stats(table, files, cols)
         if fs is not None:
             return fs
-    df = spark.read.parquet(*[_resolve(root, f) for f in files])
+    df = spark.read.parquet(*[resolve(root, f) for f in files])
     aggs = []
     for i, c in enumerate(cols):
         aggs.append(F.min(c).alias(f"__mn{i}"))
@@ -1916,7 +1873,7 @@ def _files_containing(
         spark, table, schema, candidates, dvs or {}, path_col="__f", cmap=cmap
     )
     hit = [r["__f"] for r in marker(df).select("__f").distinct().collect()]
-    by_suffix = {_relativize(_resolve(root, f)): f for f in candidates}
+    by_suffix = {_relativize(resolve(root, f)): f for f in candidates}
     return {by_suffix[_relativize(p)] for p in hit}
 
 
@@ -1976,10 +1933,6 @@ def _txn_cache_put(cache: dict, key, state: str) -> None:
     cache[key] = state
 
 
-def _txn_seal_name(version: int) -> str:
-    return f"{version:08d}.txnseal"
-
-
 def _txn_read_seal(
     spark: SparkSession, table: str, version: int, txn_id: str
 ) -> str | None:
@@ -1994,7 +1947,7 @@ def _txn_read_seal(
     if cached:
         return cached
     try:
-        text = _read_commit_text(spark, table, _txn_seal_name(version))
+        text = _read_commit_text(spark, table, mf.seal_name(version))
     except FileNotFoundError:
         return None
     doc = json.loads(text)
@@ -2025,7 +1978,7 @@ def _txn_write_seal(
             )
         finally:
             out.close()
-        if not fs.rename(tmp, _jp(spark, table, _COMMITS, _txn_seal_name(version))):
+        if not fs.rename(tmp, _jp(spark, table, _COMMITS, mf.seal_name(version))):
             fs.delete(tmp, False)
         _txn_cache_put(_TXN_SEAL_CACHE, (table, version, txn_id), state)
     except Exception:
@@ -2041,7 +1994,7 @@ def _txn_read_final(spark: SparkSession, root: str, txn_id: str) -> str | None:
     if cached:
         return cached
     fs, _ = _hadoop_fs(spark, root)
-    p = _jp(spark, root, f"txn-{txn_id}.final")
+    p = _jp(spark, root, mf.final_name(txn_id))
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -2067,7 +2020,7 @@ def _txn_decide(
     fs, jroot = _hadoop_fs(spark, root)
     fs.mkdirs(jroot)
     tmp = _jp(spark, root, f".tmp-final-{uuid.uuid4().hex}")
-    dest = _jp(spark, root, f"txn-{txn_id}.final")
+    dest = _jp(spark, root, mf.final_name(txn_id))
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(json.dumps({"state": want}).encode("utf-8")))
@@ -2151,17 +2104,10 @@ def _resolve_marker_text(
     knows (table, version), a table-side SEAL is consulted first and
     written on first resolution, so a decided verdict survives
     transaction-root cleanup (r11 advice)."""
-    # fast path: the txn field lives in the header (first line); a
-    # substring probe skips the double JSON parse every non-txn marker
-    # would otherwise pay on every read (bench: multi-version walks like
-    # the change feed parse each marker exactly once again)
-    nl = text.find("\n")
-    if '"txn"' not in (text if nl < 0 else text[:nl]):
+    header = mf.txn_claim(text)
+    if header is None:
         return text
-    header, _body = mf.parse_marker(text)
-    txn = header.get("txn")
-    if not txn or header.get("txn_aborted"):
-        return text
+    txn = header["txn"]
     state = None
     sealed = False
     if table is not None and version is not None:
@@ -2173,11 +2119,9 @@ def _resolve_marker_text(
             try:
                 import time
 
-                fs, _ = _hadoop_fs(spark, table)
-                st = fs.getFileStatus(
-                    _jp(spark, table, _COMMITS, mf.marker_name(version))
+                claim_age_s = time.time() - _commit_mtime(
+                    spark, table, mf.marker_name(version)
                 )
-                claim_age_s = time.time() - st.getModificationTime() / 1000.0
             except Exception:
                 claim_age_s = None  # unstat-able marker: keep legacy behavior
         state = _txn_resolve_as_reader(
@@ -2185,13 +2129,7 @@ def _resolve_marker_text(
         )
     if not sealed and table is not None and version is not None:
         _txn_write_seal(spark, table, version, txn["id"], state)
-    if state == "commit":
-        return text
-    header = dict(header)
-    header["txn_aborted"] = True
-    header["fmt"] = 2
-    header.pop("cdf", None)  # an aborted commit's change files never fed
-    return json.dumps(header, sort_keys=True) + "\n"
+    return text if state == "commit" else mf.aborted_view(header)
 
 
 def commit_transaction(
@@ -2675,21 +2613,7 @@ def _commit(
         # post-feature commit on a mixed history stays monotone with the
         # instants resolution actually compares, even under clock skew
         try:
-            local = _local_path(table, spark)
-            if local is not None:
-                pts = os.path.getmtime(
-                    f"{local.rstrip('/')}/{_COMMITS}/"
-                    f"{mf.marker_name(version - 1)}"
-                )
-            else:
-                fs, _ = _hadoop_fs(spark, table)
-                pts = (
-                    fs.getFileStatus(
-                        _jp(spark, table, _COMMITS,
-                            mf.marker_name(version - 1))
-                    ).getModificationTime()
-                    / 1000.0
-                )
+            pts = _commit_mtime(spark, table, mf.marker_name(version - 1))
         except Exception:
             pts = None  # unreadable parent marker: fall back to wall clock
     header["commit_ts"] = round(
@@ -2715,7 +2639,7 @@ def _commit(
         fresh = [f for f in files if f not in prev_set]
         if fresh and op != "clone":
             df = spark.read.schema(_physical_schema(schema, eff_cmap)).parquet(
-                *[_resolve(table.rstrip("/"), f) for f in fresh]
+                *[resolve(table.rstrip("/"), f) for f in fresh]
             )
             if eff_cmap:
                 df = df.select(
@@ -2854,7 +2778,7 @@ def _footer_rows(table: str, relpath: str) -> int | None:
         import pyarrow.parquet as pq
 
         return pq.ParquetFile(
-            _resolve(table.rstrip("/"), relpath)
+            resolve(table.rstrip("/"), relpath)
         ).metadata.num_rows
     except Exception:
         return None
@@ -2945,7 +2869,7 @@ def _read_commit_text_at(spark: SparkSession, table: str, relpath: str) -> str:
     """Text of a table-relative (or foreign/absolute — clones) file."""
     fs, _ = _hadoop_fs(spark, table)
     p = spark._jvm.org.apache.hadoop.fs.Path(
-        _resolve(table.rstrip("/"), relpath)
+        resolve(table.rstrip("/"), relpath)
     )
     stream = fs.open(p)
     try:
@@ -3021,7 +2945,7 @@ def _read_files_masked(
     need_meta = path_col is not None or idx_col is not None
     if not live and not need_meta:
         return reader.parquet(
-            *[_resolve(root, f) for f in files]
+            *[resolve(root, f) for f in files]
         ).select(*cols)
     keep = list(cols)
     if path_col:
@@ -3037,7 +2961,7 @@ def _read_files_masked(
     clean = [f for f in files if f not in live]
     parts: list[DataFrame] = []
     if clean:
-        cdf = reader.parquet(*[_resolve(root, f) for f in clean])
+        cdf = reader.parquet(*[resolve(root, f) for f in clean])
         parts.append(
             (_with_meta(cdf) if need_meta else cdf).select(
                 *(keep if need_meta else cols)
@@ -3045,9 +2969,9 @@ def _read_files_masked(
         )
     if live:
         df = _with_meta(
-            reader.parquet(*[_resolve(root, f) for f in live])
+            reader.parquet(*[resolve(root, f) for f in live])
         )
-        suffix_of = lambda f: _relativize(_resolve(root, f))  # noqa: E731
+        suffix_of = lambda f: _relativize(resolve(root, f))  # noqa: E731
         rels: list[DataFrame] = []
         inline = [
             (suffix_of(f), [int(i) for i in dv["i"]])
@@ -3088,7 +3012,7 @@ def _read_files_masked(
             sc_idx = (
                 spark.read.schema("i array<bigint>")
                 .option("mode", "FAILFAST")
-                .json([_resolve(root, dv["p"]) for _, dv in live.items() if "p" in dv])
+                .json([resolve(root, dv["p"]) for _, dv in live.items() if "p" in dv])
                 .select(sc_suffix.alias("__vt_sc"), F.col("i"))
             )
             rels.append(
@@ -3979,7 +3903,7 @@ def vacuum_versions(
             ck = _jp(spark, table, _COMMITS, mf.ckpt_name(v))
             if fs.exists(ck):
                 fs.delete(ck, False)
-            seal = _jp(spark, table, _COMMITS, _txn_seal_name(v))
+            seal = _jp(spark, table, _COMMITS, mf.seal_name(v))
             if fs.exists(seal):
                 fs.delete(seal, False)
             for k in [
@@ -4038,7 +3962,7 @@ def vacuum_versions(
     root = table.rstrip("/")
     parents = set()
     for f in sorted(doomed):
-        if _is_foreign(f):
+        if is_foreign(f):
             # a shallow clone's by-reference file: it belongs to the
             # SOURCE table and only the source's own vacuum may reclaim
             # it — exactly Delta's clone/vacuum split of responsibility
@@ -4724,28 +4648,12 @@ def version_at_or_after_timestamp(spark: SparkSession, table: str, ts) -> int:
     """EARLIEST version committed at or after ``ts`` — the resolution
     rule Delta gives CDF's ``startingTimestamp`` (an inclusive LOWER
     bound on the feed, so it rounds the other way than
-    ``version_at_timestamp``). In-commit ``commit_ts`` first, mtime
-    fallback for pre-feature markers; the ascending walk reads only
-    markers OLDER than the target before the first hit. Raises if every
-    commit predates ``ts`` (Delta errors identically — the feed would
-    be empty and silently so)."""
-    epoch = ts.timestamp() if hasattr(ts, "timestamp") else float(ts)
-    fs, _ = _hadoop_fs(spark, table)
-    cdir = _jp(spark, table, _COMMITS)
-    mtimes: dict[int, float] = {}
-    if fs.exists(cdir):
-        for st in fs.listStatus(cdir):
-            m = _MARKER.match(st.getPath().getName())
-            if m:
-                mtimes[int(m.group(1))] = st.getModificationTime() / 1000.0
-    for v in sorted(mtimes):
-        try:
-            cts = parse_commit(spark, table, v)[0].get("commit_ts")
-        except FileNotFoundError:
-            cts = None
-        eff = float(cts) if cts is not None else mtimes[v]
-        if eff >= epoch:
-            return v
+    ``version_at_timestamp``; same raw-header rule, ``mf.version_at``).
+    Raises if every commit predates ``ts`` (Delta errors identically —
+    the feed would be empty and silently so)."""
+    v = _version_at(spark, table, ts, after=True)
+    if v is not None:
+        return v
     raise FileNotFoundError(
         f"versioned table {table!r} has no commit at or after timestamp "
         f"{ts!r} (every commit is older, or no commits)"
@@ -4845,7 +4753,7 @@ def read_change_feed(
             if cdf:
                 parts.append(
                     _feed_read(
-                        ct_schema, [_resolve(root, f) for f in cdf]
+                        ct_schema, [resolve(root, f) for f in cdf]
                     ).withColumn("_commit_version", F.lit(v).cast("long"))
                 )
             continue
@@ -4853,7 +4761,7 @@ def read_change_feed(
             added = _added_files(spark, table, v, header, body)
             if added:
                 parts.append(
-                    _feed_read(end_schema, [_resolve(root, f) for f in added])
+                    _feed_read(end_schema, [resolve(root, f) for f in added])
                     .withColumn("_change_type", F.lit("insert"))
                     .withColumn("_commit_version", F.lit(v).cast("long"))
                 )

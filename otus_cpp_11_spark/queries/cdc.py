@@ -1932,7 +1932,8 @@ def versioned_timestamp_round_trip(spark: SparkSession, sf_dir: str) -> DataFram
     the oracle recomputes it from the documents table: the %3 ingest
     slices); (b) TIMESTAMP AS OF round-trip — both rounding directions
     resolve the instant to exactly its version; (c) the connector's
-    plain-FS resolvers agree with the engine's; (d) an instant strictly
+    public face agrees: ``timestampAsOf`` at the instant reads the same
+    row count; (d) an instant strictly
     BETWEEN two commits resolves down to the earlier and up to the
     later (the write-side monotone clamp guarantees >= 1 ms spacing, so
     +0.4 ms sits strictly between), with the last version's round-up
@@ -1947,10 +1948,7 @@ def versioned_timestamp_round_trip(spark: SparkSession, sf_dir: str) -> DataFram
         version_header,
     )
     from otus_cpp_11_spark.session import scratch_dir
-    from otus_cpp_11_spark.sources import (
-        _vt_version_at_or_after_timestamp,
-        _vt_version_at_timestamp,
-    )
+    from otus_cpp_11_spark.sources import register_versioned_table_source
 
     import os
 
@@ -1962,6 +1960,7 @@ def versioned_timestamp_round_trip(spark: SparkSession, sf_dir: str) -> DataFram
     cdir = f"{tbl}/_commits"
     for n in os.listdir(cdir):
         os.utime(f"{cdir}/{n}", (1000.0, 1000.0))
+    register_versioned_table_source(spark)
     rows = []
     for v in (1, 2, 3):
         cts = version_header(spark, tbl, v)["commit_ts"]
@@ -1971,8 +1970,12 @@ def versioned_timestamp_round_trip(spark: SparkSession, sf_dir: str) -> DataFram
             and version_at_or_after_timestamp(spark, tbl, cts) == v
         )
         connector = (
-            _vt_version_at_timestamp(tbl, cts) == v
-            and _vt_version_at_or_after_timestamp(tbl, cts) == v
+            spark.read.format("versioned_table")
+            .option("path", tbl)
+            .option("timestampAsOf", repr(cts))
+            .load()
+            .count()
+            == n_rows
         )
         mid = cts + 0.0004  # < the 1 ms clamp: strictly between commits
         down_ok = version_at_timestamp(spark, tbl, mid) == v

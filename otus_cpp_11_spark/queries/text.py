@@ -24,7 +24,8 @@ STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "for")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 # The C4-style quality gate, importable so instrumented pipelines
-# (ops/observe.py) gate with EXACTLY the thresholds this query verifies.
+# (the observed funnel in tests/test_round5_ops.py) gate with EXACTLY the
+# thresholds this query verifies.
 QUALITY_MIN_TOKENS = 20
 QUALITY_MIN_STOP_RATIO = 0.05
 

@@ -185,16 +185,23 @@ def register(
 # stays at 50 by deferring six REVERIFY names (see WINDOW_DEFER). The
 # sorted-fold rewrite of the prefix query then drifted
 # prefix_min_unique_len, re-queued the same way (one more defer).
+#
+# Then: moving the versioned-table log reads (path resolution, local
+# ``_commits`` reads, the aborted-claim view, the timestamp walk) into
+# manifest_format, shared by the engine and the connector, drifted 28
+# pins: every query whose helper closure reaches list_versions,
+# _read_commit_text, read_manifest, _resolve_marker_text or the path
+# resolver (27 of them with unchanged own source), plus
+# versioned_timestamp_round_trip, whose connector column now reads
+# through the connector's public timestampAsOf face. All 28 are
+# re-queued; see WINDOW_DEFER for how the window stays at 50.
 DRIVER_VERIFIED: dict[str, str] = {
-    "ann_index_cdc_upsert_txn": "50720d82def7",
-    "ann_index_streamed": "d75893debb1f",
     "balanced_doc_sample": "b6a61b7da52b",
     "bpe_token_frequencies": "0074412e1e7c",
     "budgeted_mixture_selection": "bcbf7819dfdd",
     "copurchase_association_rules": "0a2e41059f3a",
     "copurchase_part_pairs": "fc5000d15843",
     "corpus_datacard": "cc0785777e42",
-    "corpus_datacard_streamed": "24314ccf0181",
     "corpus_dedup_stats": "a28bdb4ace96",
     "cross_modal_doc_features": "548bd3e3414a",
     "customer_monthly_retention": "c346477ea490",
@@ -245,19 +252,15 @@ DRIVER_VERIFIED: dict[str, str] = {
     "events_dedup_streamed": "1778c17575ea",
     "events_enriched_streamed": "797146f94302",
     "events_hourly_profile": "a2f1430d5179",
-    "events_minute_rollup_streamed": "19c2b9f8dcf0",
     "events_pit_enrich": "c44713dad114",
     "events_props_variant": "217d3fc4548c",
     "events_session_windows_streamed": "5782751ea494",
     "events_sliding_10min_5min_streamed": "0ae91db58f48",
     "events_tumbling_5min_streamed": "15ab503b1162",
-    "events_versioned_ingest_streamed": "423ccb83236f",
     "exact_dup_groups": "c7266cc39f58",
     "forget_sweep_accounting": "9d43e0648182",
-    "incremental_decontamination": "39f012d36133",
     "incremental_near_dup": "17cf16026932",
     "ips_policy_value": "358a89893114",
-    "ivf_pq_top5": "0192c1d8f396",
     "ivf_train_distortion_curve": "7a49f9c235af",
     "jaccard_prefix_filter_pairs": "8971859a16b7",
     "label_centroids": "8ae72a2f8c44",
@@ -296,10 +299,8 @@ DRIVER_VERIFIED: dict[str, str] = {
     "ppm_ahash_near_dup_counts": "dc58f4ddd8c6",
     "ppm_decode_features": "675dc7cc5b8f",
     "ppm_resize_2x2": "cc33a2387f9e",
-    "pq_adc_top10": "6f4ac496267a",
     "pq_code_assignment": "9874adada751",
     "pq_encode_arrow": "33967e174272",
-    "pq_index_after_append": "c7406602140e",
     "pq_train_distortion_curve": "9cbce0cb7865",
     "prefix_cache_analysis": "0f785bb8eb7c",
     "prefix_counts_l1": "5ed63895ccac",
@@ -331,7 +332,6 @@ DRIVER_VERIFIED: dict[str, str] = {
     "region_nation_full_outer": "a6f16ccd3dcf",
     "region_nation_list": "7a97aa33a1cc",
     "repeated_span_strip_stats": "aa37c4c8028d",
-    "rtbf_forget_base_and_index_txn": "6f1ab1ce9f92",
     "running_user_counts_streamed": "58ed3c7e1c34",
     "scalar_string_math": "67d6d8df099b",
     "session_top_paths": "674d0a04c76e",
@@ -345,33 +345,15 @@ DRIVER_VERIFIED: dict[str, str] = {
     "suppliers_with_returns": "853d0723e215",
     "term_cms_heavy_hitters": "94875d8df06e",
     "top3_orders_per_customer": "329442b68974",
-    "txn_consistent_read": "c7e57a0c3c97",
     "unique_by_abs": "c38a77625bd0",
     "user_cohort_weekly_retention": "546151d58f93",
     "user_event_sessions": "823cded3c5bb",
     "user_funnel_conversion": "d01836100c7e",
-    "user_state_cdc_streamed": "5b29b30eeb82",
     "user_state_scd2": "c99bc6f8646c",
-    "user_state_scd2_streamed": "339d4b5d3b0b",
     "user_value_moving_avg": "fe348a6dd587",
     "user_value_scd2": "76f403ac8dee",
     "user_value_udaf_sum": "05f33b4284c3",
     "user_value_zscore_outliers": "eb32ab1eb75c",
-    "versioned_autocompact_ingest": "15234be04c25",
-    "versioned_bloom_point_lookup": "08be37b00957",
-    "versioned_change_feed_streamed": "b935249b0abf",
-    "versioned_column_mapping_lifecycle": "11032ff49233",
-    "versioned_dv_pressure_valve": "1484d6da04d6",
-    "versioned_metadata_count": "5348c68d360c",
-    "versioned_multi_table_txn": "69dfa34d78bd",
-    "versioned_optimize_roundtrip": "4654827902fe",
-    "versioned_optimize_where": "e48cc57163d1",
-    "versioned_rtbf_deletion_vectors": "51c0f5297a60",
-    "versioned_scan_skipping": "6abf2be06b03",
-    "versioned_schema_evolution": "4145c8dc49b8",
-    "versioned_stream_rollup": "4be403bf5237",
-    "versioned_timestamp_round_trip": "6922872e67b0",
-    "versioned_type_widening_lifecycle": "7831e30dd519",
     "view_purchase_left_outer_streamed": "2c3defeabdfa",
     "view_purchase_within_6h": "91f7b2912d2c",
     "view_purchase_within_6h_streamed": "2da63af6a4e5",
@@ -385,42 +367,56 @@ DRIVER_VERIFIED: dict[str, str] = {
 # after the rest of the unverified set (they stay gated by the local
 # oracle harness and take a slot next round). Queries added mid-round go
 # here so they don't displace the 50 already queued for driver rows.
-# Now: the seven oldest-vintage REVERIFY names (the two r7 survivors and
-# the alphabetically-first r8 members), one per pin the recall-gate
-# helper refactor and the prefix rewrite drifted, so the changed code
-# takes their window slots.
+# Now: every oldest-vintage REVERIFY name (20: deferred seven at a time
+# as the recall-gate and prefix rewrites drifted pins, the last 13 when
+# the shared commit-log reader drifted 28), then the 15 alphabetically-
+# first of those 28 whose own query source is unchanged (ann_index_* ..
+# versioned_bloom_point_lookup), so the window holds exactly 50.
 WINDOW_DEFER: frozenset[str] = frozenset({
-    "customer_order_gap_stats",
-    "embedding_norms_by_label",
-    "events_json_props",
-    "events_multires_rollup",
-    "events_session_windows",
-    "q13_customer_distribution",
-    "q22_global_sales_opportunity",
-})
-
-# Round-14 refill (r13 ADVICE: restored members no longer double-listed —
-# this set now contains EXACTLY the queued-for-reverification names):
-# the 20 oldest-vintage greens (both r7 survivors, the r8 remainder, and
-# the alphabetically-first r9 members) less the seven now in WINDOW_DEFER,
-# ordered AFTER the round's changed/helper-drifted queries by
-# all_queries() so re-certification of changed code always wins window
-# slots over routine vintage rotation.
-REVERIFY: frozenset[str] = frozenset({
+    "ann_index_cdc_upsert_txn",
+    "ann_index_streamed",
     "bm25_stats_streamed",
     "bpe_pair_counts",
     "cdc_change_data_feed",
     "cdf_incremental_state_counts",
     "cdf_netting_across_versions",
     "corpus_after_span_strip",
+    "corpus_datacard_streamed",
+    "customer_order_gap_stats",
+    "embedding_norms_by_label",
+    "events_json_props",
+    "events_minute_rollup_streamed",
+    "events_multires_rollup",
+    "events_session_windows",
     "events_sliding_10min_5min",
     "events_tumbling_5min",
     "events_user_sketches",
+    "events_versioned_ingest_streamed",
+    "incremental_decontamination",
+    "ivf_pq_top5",
     "kmeans_assign_update",
     "lineitem_measures_unpivot",
     "lineitem_profile",
+    "pq_adc_top10",
+    "pq_index_after_append",
+    "q13_customer_distribution",
+    "q22_global_sales_opportunity",
+    "rtbf_forget_base_and_index_txn",
+    "txn_consistent_read",
+    "user_state_cdc_streamed",
+    "user_state_scd2_streamed",
     "user_value_resample_1h_ffill",
+    "versioned_autocompact_ingest",
+    "versioned_bloom_point_lookup",
 })
+
+# Round-14 refill (r13 ADVICE: restored members no longer double-listed —
+# this set contains EXACTLY the queued-for-reverification names), ordered
+# AFTER the round's changed/helper-drifted queries by all_queries() so
+# re-certification of changed code always wins window slots over routine
+# vintage rotation. Empty now: all 20 oldest-vintage greens it held have
+# moved to WINDOW_DEFER (see above).
+REVERIFY: frozenset[str] = frozenset()
 
 
 def all_queries() -> dict[str, Query]:

@@ -24,6 +24,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from otus_cpp_11_spark.ops import manifest_format as mf
+
 log = logging.getLogger(__name__)
 
 SOURCE_NAME = "synthetic_events"
@@ -136,70 +138,35 @@ _VT_STREAM_NEUTRAL_OPS = frozenset(
 # wide schema); we do the same, loudly and at the widening commit.
 
 
-def _vt_commits_dir(table: str) -> str:
-    return f"{table.rstrip('/')}/_commits"
-
-
-def _vt_current_version(table: str):
-    import os
-    import re as _re
-
-    d = _vt_commits_dir(table)
-    if not os.path.isdir(d):
-        return None
-    vs = [int(n) for n in os.listdir(d) if _re.fullmatch(r"\d{8}", n)]
-    return max(vs) if vs else None
-
-
-def _vt_read_text(table: str, name: str) -> str:
-    with open(f"{_vt_commits_dir(table)}/{name}") as f:
-        return f.read()
-
-
-def _vt_resolve_txn_text(
-    text: str, table: str | None = None, version: int | None = None
-) -> str:
-    """The connector's READER-ONLY twin of ops.versioned's transaction
-    resolution: a marker claimed by a multi-table transaction
-    (``txn`` in its header) is committed iff the transaction's final
-    record says so. Committed passes through; aborted rewrites to a
-    header-only no-op; IN-DOUBT polls briefly then fails loudly — this
-    face cannot write the abort record an engine reader would, and
-    silently skipping could permanently drop a version a stream cursor
-    then moves past. A table-side seal (``<version>.txnseal``, written
-    by the coordinator or an engine reader's first resolution) is
-    consulted BEFORE the transaction root, so a cleaned root never
-    strands or rewrites decided history on this face either."""
-    import json as _json
-    import os
+def _vt_resolve_txn_text(text: str, table: str, version: int) -> str:
+    """The connector's READER-ONLY view of a txn-claimed marker
+    (``mf.txn_claim``): committed passes through, aborted becomes
+    ``mf.aborted_view``. An IN-DOUBT claim polls briefly then fails
+    loudly — this face cannot write the abort record an engine reader
+    would, and silently skipping could permanently drop a version a
+    stream cursor then moves past. The table-side seal is consulted
+    BEFORE the transaction root, so a cleaned root never strands or
+    rewrites decided history on this face either."""
+    import json
     import time
 
-    from otus_cpp_11_spark.ops import manifest_format as mf
-
-    # fast path mirroring ops.versioned._resolve_marker_text: skip the
-    # double parse for every marker not claimed by a transaction
-    nl = text.find("\n")
-    if '"txn"' not in (text if nl < 0 else text[:nl]):
+    header = mf.txn_claim(text)
+    if header is None:
         return text
-    header, _body = mf.parse_marker(text)
-    txn = header.get("txn")
-    if not txn or header.get("txn_aborted"):
-        return text
-    state = None
-    if table is not None and version is not None:
-        seal_path = f"{_vt_commits_dir(table)}/{version:08d}.txnseal"
-        if os.path.exists(seal_path):
-            with open(seal_path) as f:
-                doc = _json.load(f)
-            if doc.get("txn") == txn["id"]:
-                state = doc["state"]
-    final_path = f"{txn['root'].rstrip('/')}/txn-{txn['id']}.final"
+    txn = header["txn"]
+    try:
+        doc = json.loads(mf.local_read(table, mf.seal_name(version)))
+    except FileNotFoundError:
+        doc = {}
+    state = doc["state"] if doc.get("txn") == txn["id"] else None
+    final_path = f"{txn['root'].rstrip('/')}/{mf.final_name(txn['id'])}"
 
     def final_state():
-        if not os.path.exists(final_path):
+        try:
+            with open(final_path) as f:
+                return json.load(f)["state"]
+        except FileNotFoundError:
             return None
-        with open(final_path) as f:
-            return _json.load(f)["state"]
 
     if state is None:
         state = final_state()
@@ -213,43 +180,32 @@ def _vt_resolve_txn_text(
             f"{txn['id']!r} (no final record at {final_path!r}); read "
             "the table through ops.versioned once to resolve it"
         )
-    if state == "commit":
-        return text
-    header = dict(header)
-    header["txn_aborted"] = True
-    header["fmt"] = 2
-    header.pop("cdf", None)
-    return _json.dumps(header, sort_keys=True) + "\n"
+    return text if state == "commit" else mf.aborted_view(header)
+
+
+def _vt_marker(table: str, version: int) -> tuple[dict, list[str]]:
+    """(header, body) of one commit marker, txn claims resolved."""
+    text = mf.local_read(table, mf.marker_name(version))
+    return mf.parse_marker(_vt_resolve_txn_text(text, table, version))
 
 
 def _vt_read_manifest(table: str, version: int):
-    """(marker header + reconstructed ``dv`` map, snapshot file list) —
-    the connector's plain-FS twin of ``ops.versioned.read_manifest``.
-    Delta-encoded markers (manifest_format) mean the file list is
-    REPLAYED from the nearest checkpoint, not read from one marker;
-    this runs DRIVER-side only (``partitions()`` / ``schema()``), so
-    importing the shared pure-Python core here is pickle-safe."""
-    import os
-
-    from otus_cpp_11_spark.ops import manifest_format as mf
+    """(marker header + reconstructed ``dv`` map, snapshot file list) of
+    a plain-filesystem table: the shared ``mf`` log reads and replay,
+    run DRIVER-side only (``partitions()`` / ``schema()``)."""
 
     def read(n: str) -> str:
-        text = _vt_read_text(table, n)
+        text = mf.local_read(table, n)
         m = mf.MARKER_RE.match(n)
-        if m:
-            return _vt_resolve_txn_text(text, table, int(m.group(1)))
-        return text
+        return _vt_resolve_txn_text(text, table, int(m.group(1))) if m else text
 
-    header, _ = mf.parse_marker(read(mf.marker_name(version)))
-    d = _vt_commits_dir(table)
-    names = os.listdir(d) if os.path.isdir(d) else []
-    state = mf.load_state(version, read, names)
-    header = dict(header)
+    header, _ = _vt_marker(table, version)
+    state = mf.load_state(version, read, mf.local_names(table))
     if state["dv"]:
         header["dv"] = state["dv"]
     else:
         header.pop("dv", None)
-    return header, list(state["files"])
+    return header, state["files"]
 
 
 def _vt_dv_descriptor(table: str, dv: dict) -> dict:
@@ -261,7 +217,7 @@ def _vt_dv_descriptor(table: str, dv: dict) -> dict:
     memory and pickled partition bytes)."""
     if "i" in dv:
         return {"i": list(dv["i"])}
-    return {"p": _vt_resolve(table, dv["p"])}
+    return {"p": mf.resolve(table, dv["p"])}
 
 
 def _vt_dv_load(dv: dict | None) -> list[int]:
@@ -274,81 +230,6 @@ def _vt_dv_load(dv: dict | None) -> list[int]:
         return list(dv["i"])
     with open(dv["p"]) as f:
         return json.load(f)["i"]
-
-
-def _vt_resolve(table: str, f: str) -> str:
-    """Physical path of a manifest entry — mirror of ops.versioned's
-    ``_resolve`` for the connector's plain-FS (pickle-safe) reader:
-    table-relative entries join the root; a shallow clone's absolute /
-    URI entries pass through unchanged."""
-    import re as _re
-
-    if f.startswith("/") or _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", f):
-        return f
-    return f"{table.rstrip('/')}/{f}"
-
-
-def _vt_version_at_timestamp(table: str, ts: float):
-    """Latest version committed at or before ``ts`` — the connector's
-    twin of ``ops.versioned.version_at_timestamp``: IN-COMMIT timestamp
-    (the marker's own monotone ``commit_ts`` header field) first, so
-    time travel survives mtime-perturbing copies; markers from before
-    the feature fall back to their mtime (the old atomic-rename-instant
-    rule). Newest-first walk, first hit wins — only markers newer than
-    the target are read (one header line each). The raw header is
-    enough even for a multi-table txn claim (its ``commit_ts`` was
-    clamped at staging and an aborted claim still holds its slot), so
-    no txn resolution is needed here. None if no commit is that old."""
-    import json as _json
-    import os
-    import re as _re
-
-    d = _vt_commits_dir(table)
-    if not os.path.isdir(d):
-        return None
-    versions = sorted(
-        (int(n) for n in os.listdir(d) if _re.fullmatch(r"\d{8}", n)),
-        reverse=True,
-    )
-    for v in versions:
-        p = f"{d}/{v:08d}"
-        try:
-            with open(p) as fh:
-                cts = _json.loads(fh.readline()).get("commit_ts")
-        except (OSError, ValueError):
-            cts = None
-        eff = float(cts) if cts is not None else os.path.getmtime(p)
-        if eff <= ts:
-            return v
-    return None
-
-
-def _vt_version_at_or_after_timestamp(table: str, ts: float):
-    """EARLIEST version committed at or after ``ts`` — the round-UP
-    twin (Delta's rule for CDF startingTimestamp and the STREAMING
-    source's startingTimestamp, both inclusive lower bounds). In-commit
-    ``commit_ts`` first, mtime fallback; ascending walk, first hit.
-    None when every commit predates ``ts``."""
-    import json as _json
-    import os
-    import re as _re
-
-    d = _vt_commits_dir(table)
-    if not os.path.isdir(d):
-        return None
-    for v in sorted(
-        int(n) for n in os.listdir(d) if _re.fullmatch(r"\d{8}", n)
-    ):
-        p = f"{d}/{v:08d}"
-        try:
-            with open(p) as fh:
-                cts = _json.loads(fh.readline()).get("commit_ts")
-        except (OSError, ValueError):
-            cts = None
-        eff = float(cts) if cts is not None else os.path.getmtime(p)
-        if eff >= ts:
-            return v
-    return None
 
 
 def _vt_parse_ts(raw: str) -> float:
@@ -380,8 +261,9 @@ def _vt_opts(options: dict) -> dict:
 
 
 def _vt_pinned_version(options: dict):
-    """Resolve versionAsOf / timestampAsOf (mutually exclusive) to a
-    version number, or None for the current snapshot."""
+    """The version a batch read pins: versionAsOf / timestampAsOf
+    (mutually exclusive), else the current version (None for a table
+    with no commits)."""
     options = _vt_opts(options)
     table = options["path"].rstrip("/")
     v_opt, t_opt = options.get("versionasof"), options.get("timestampasof")
@@ -394,14 +276,14 @@ def _vt_pinned_version(options: dict):
         return int(v_opt)
     if t_opt is not None:
         ts = _vt_parse_ts(t_opt)
-        v = _vt_version_at_timestamp(table, ts)
+        v = mf.local_version_at(table, ts)
         if v is None:
             raise ValueError(
                 f"versioned_table: no commit of {table!r} at or before "
                 f"timestampAsOf={t_opt!r} (earliest commit is newer)"
             )
         return v
-    return None
+    return max(mf.local_versions(table), default=None)
 
 
 def _vt_cdf_schema_json(schema_json: str) -> str:
@@ -409,8 +291,6 @@ def _vt_cdf_schema_json(schema_json: str) -> str:
     Delta CDF shape, field list shared with the batch face through
     ``manifest_format.CDF_FIELDS``."""
     import json
-
-    from otus_cpp_11_spark.ops import manifest_format as mf
 
     s = json.loads(schema_json)
     s["fields"] = list(s["fields"]) + [
@@ -541,20 +421,17 @@ class _VTBatchReader(DataSourceReader):
     file (the manifest is the split plan — no directory listing, no
     footer probing on the driver). Defaults to the CURRENT snapshot;
     ``versionAsOf``/``timestampAsOf`` pin time travel exactly like
-    Delta's options of the same names (timestamp resolves through the
-    commit marker's mtime — the atomic-rename instant IS the commit
-    time)."""
+    Delta's options of the same names (a timestamp resolves to the
+    latest version whose in-commit ``commit_ts`` — the marker's mtime
+    for pre-feature markers — is at or before it: ``mf.version_at``)."""
 
     def __init__(self, options: dict):
         self.table = _vt_opts(options)["path"].rstrip("/")
-        pinned = _vt_pinned_version(options)
         # resolve the version ONCE: re-resolving at plan time would let a
         # concurrent commit tear the read (one version's files aligned to
         # another version's schema) — snapshot isolation means the whole
         # read is pinned to the version chosen here
-        self.version = (
-            pinned if pinned is not None else _vt_current_version(self.table)
-        )
+        self.version = _vt_pinned_version(options)
         # the snapshot's declared schema + column mapping ride to
         # executors with the (pickled) reader so every file read aligns
         self._hdr = (
@@ -580,7 +457,7 @@ class _VTBatchReader(DataSourceReader):
         dvs = header.get("dv") or {}
         return [
             _VTFile(
-                _vt_resolve(self.table, f),
+                mf.resolve(self.table, f),
                 _vt_dv_descriptor(self.table, dvs[f]) if dvs.get(f) else None,
             )
             for f in files
@@ -611,7 +488,7 @@ class _VTStreamReader(DataSourceStreamReader):
         # are already reflected in that schema and stream-neutral, while
         # a widening committed AFTER it fails the walk loudly (Delta's
         # readStream-on-schema-change restart contract)
-        self._schema_pin = _vt_current_version(self.table) or 0
+        self._schema_pin = max(mf.local_versions(self.table), default=0)
         self.skip_change = (
             str(options.get("skipchangecommits", "false")).lower() == "true"
         )
@@ -623,10 +500,8 @@ class _VTStreamReader(DataSourceStreamReader):
         self.cdf = str(options.get("readchangefeed", "false")).lower() == "true"
         self.starting = options.get("startingversion")
         # startingTimestamp — Delta's option of the same name: stream
-        # changes committed strictly AFTER the greatest commit whose
-        # marker mtime <= ts (the marker's atomic-rename instant IS the
-        # commit instant, as in batch timestampAsOf). Mutually exclusive
-        # with startingVersion.
+        # changes committed AT or after the instant (see _starting_base).
+        # Mutually exclusive with startingVersion.
         self.starting_ts = options.get("startingtimestamp")
         if self.starting is not None and self.starting_ts is not None:
             raise ValueError(
@@ -691,7 +566,7 @@ class _VTStreamReader(DataSourceStreamReader):
         # reader planned backward still fails loudly (genuine anomaly).
         self._learned = False
         self._floor: int | None = None
-        cur = _vt_current_version(self.table)
+        cur = max(mf.local_versions(self.table), default=None)
         # the stream's schema is FIXED at start (Spark resolves it once);
         # align every commit's files to it — older files pad evolved
         # columns with NULL, files evolved mid-stream project down
@@ -715,17 +590,17 @@ class _VTStreamReader(DataSourceStreamReader):
             # after the instant (inclusive — the same round-UP rule as
             # CDF's ts_from), so the base is the version BEFORE the
             # first qualifying commit; when every commit predates the
-            # instant, the stream tails future commits only. In-commit
-            # timestamps first (mtime fallback), like every other face.
+            # instant, the stream tails future commits only. Resolved by
+            # the shared rule (mf.version_at: commit_ts, mtime fallback).
             ts = _vt_parse_ts(self.starting_ts)
-            v = _vt_version_at_or_after_timestamp(self.table, ts)
+            v = mf.local_version_at(self.table, ts, after=True)
             if v is not None:
                 return v - 1
-            return _vt_current_version(self.table) or 0
+            return max(mf.local_versions(self.table), default=0)
         if self.starting is None:
             return 0
         if str(self.starting).lower() == "latest":
-            return _vt_current_version(self.table) or 0
+            return max(mf.local_versions(self.table), default=0)
         n = int(self.starting)
         if n < 1:
             raise ValueError(
@@ -754,13 +629,7 @@ class _VTStreamReader(DataSourceStreamReader):
             return self._adm_cache[v]
         import os
 
-        from otus_cpp_11_spark.ops import manifest_format as mf
-
-        hdr, body = mf.parse_marker(
-            _vt_resolve_txn_text(
-                _vt_read_text(self.table, mf.marker_name(v)), self.table, v
-            )
-        )
+        hdr, body = _vt_marker(self.table, v)
         if self.cdf and hdr.get("cdf") is not None:
             files: list[str] | None = list(hdr["cdf"])
         else:
@@ -770,7 +639,7 @@ class _VTStreamReader(DataSourceStreamReader):
         else:
             nbytes = (
                 sum(
-                    os.path.getsize(_vt_resolve(self.table, f))
+                    os.path.getsize(mf.resolve(self.table, f))
                     for f in files
                 )
                 if self.max_bytes is not None
@@ -781,7 +650,7 @@ class _VTStreamReader(DataSourceStreamReader):
         return out
 
     def latestOffset(self) -> dict:
-        cur = _vt_current_version(self.table) or 0
+        cur = max(mf.local_versions(self.table), default=0)
         if (
             (self.max_files is None and self.max_bytes is None)
             or self._cursor is None
@@ -858,8 +727,6 @@ class _VTStreamReader(DataSourceStreamReader):
             del self._adm_cache[v_]
         if self.cdf:
             return self._cdf_partitions(start, end)
-        from otus_cpp_11_spark.ops import manifest_format as mf
-
         lo, hi = int(start["version"]), int(end["version"])
         if self._floor is not None and self._floor > lo:
             # a degraded (backward) batch regressed the WAL below the
@@ -871,13 +738,7 @@ class _VTStreamReader(DataSourceStreamReader):
         # markers are self-describing so the common path never replays
         prev: set | None = None
         for v in range(lo + 1, hi + 1):
-            hdr, body = mf.parse_marker(
-                _vt_resolve_txn_text(
-                    _vt_read_text(self.table, mf.marker_name(v)),
-                    self.table,
-                    v,
-                )
-            )
+            hdr, body = _vt_marker(self.table, v)
             if v > 1 and hdr.get("txn_aborted"):
                 continue  # aborted multi-table claim: changed nothing
             if v > 1 and hdr.get("op") == "widen_column":
@@ -934,7 +795,7 @@ class _VTStreamReader(DataSourceStreamReader):
             # skipped change commit) — then emit the same no-batch
             # placeholder partition as the batch face
             return [] if hi == lo else [_VTFile(None)]
-        return [_VTFile(_vt_resolve(self.table, f)) for f in added]
+        return [_VTFile(mf.resolve(self.table, f)) for f in added]
 
     def _cdf_partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         """readChangeFeed planning: one partition per change/added file
@@ -944,8 +805,6 @@ class _VTStreamReader(DataSourceStreamReader):
         a feed that silently skipped it would no longer replay to the
         table). skipChangeCommits is ignored here — change commits ARE
         the stream."""
-        from otus_cpp_11_spark.ops import manifest_format as mf
-
         lo, hi = int(start["version"]), int(end["version"])
         if self._floor is not None and self._floor > lo:
             lo = min(self._floor, hi)
@@ -955,13 +814,7 @@ class _VTStreamReader(DataSourceStreamReader):
             # walk: an aborted claim's staged files must NOT feed as
             # inserts (both-or-neither), and vacuum may already have
             # reclaimed them (r11 advice, high)
-            hdr, body = mf.parse_marker(
-                _vt_resolve_txn_text(
-                    _vt_read_text(self.table, mf.marker_name(v)),
-                    self.table,
-                    v,
-                )
-            )
+            hdr, body = _vt_marker(self.table, v)
             if v > 1 and hdr.get("txn_aborted"):
                 continue  # aborted multi-table claim: changed nothing
             op = hdr.get("op")
@@ -984,7 +837,7 @@ class _VTStreamReader(DataSourceStreamReader):
             vconst = [("_commit_version", v, "int64")]
             if cdf is not None:
                 parts.extend(
-                    _VTFile(_vt_resolve(self.table, f), consts=vconst)
+                    _VTFile(mf.resolve(self.table, f), consts=vconst)
                     for f in cdf
                 )
             elif v == 1 or op == "append":
@@ -998,7 +851,7 @@ class _VTStreamReader(DataSourceStreamReader):
                     added = [f for f in body if f not in prev]
                 parts.extend(
                     _VTFile(
-                        _vt_resolve(self.table, f),
+                        mf.resolve(self.table, f),
                         consts=[("_change_type", "insert", "string"), *vconst],
                     )
                     for f in added
@@ -1033,19 +886,19 @@ class VersionedTableDataSource(DataSource):
     the same format tails append commits by version number. The schema
     comes from the resolved snapshot's manifest header (never inferred).
     Delta-parity options: batch ``versionAsOf`` / ``timestampAsOf``
-    (time travel; timestamp resolves through commit-marker mtimes),
-    stream ``startingVersion`` (``N`` streams changes from version N
-    inclusive, ``latest`` skips everything already committed) /
-    ``startingTimestamp`` (changes committed after the instant,
-    resolved through commit-marker mtimes like ``timestampAsOf``),
+    (time travel; a timestamp resolves through the in-commit
+    ``commit_ts``, falling back to the marker mtime), stream
+    ``startingVersion`` (``N`` streams changes from version N inclusive,
+    ``latest`` skips everything already committed) /
+    ``startingTimestamp`` (changes committed at or after the instant,
+    same rule as ``timestampAsOf`` rounded up),
     ``skipChangeCommits``, and ``maxFilesPerTrigger`` /
     ``maxBytesPerTrigger`` (admission control: bound each micro-batch's
     planned files/bytes at version granularity — see
-    ``_VTStreamReader``). Paths are plain-filesystem
-    here (the
-    connector runs driver-side manifest reads through ``open``); an
-    object-store deployment swaps these few lines for its client, the
-    protocol is unchanged."""
+    ``_VTStreamReader``). Paths are plain-filesystem here: driver-side
+    log reads go through ``manifest_format``'s local reads, the same
+    ones the engine uses on a local table (the engine's Hadoop branch
+    serves object stores)."""
 
     @classmethod
     def name(cls) -> str:
@@ -1060,8 +913,6 @@ class VersionedTableDataSource(DataSource):
         # a pinned snapshot carries ITS OWN schema (additive evolution
         # means older versions legitimately have fewer columns)
         v = _vt_pinned_version(self.options)
-        if v is None:
-            v = _vt_current_version(table)
         if v is None:
             raise FileNotFoundError(f"versioned table {table!r} has no commits")
         header, _ = _vt_read_manifest(table, v)

@@ -20,6 +20,7 @@ from otus_cpp_11_spark.ops.versioned import (
     commit_version,
     read_version,
     table_history,
+    version_at_or_after_timestamp,
     version_at_timestamp,
     version_header,
 )
@@ -104,7 +105,7 @@ def test_legacy_markers_fall_back_to_mtime(spark, tmp_path):
     """A table written before the feature (simulated by stripping
     commit_ts from every marker header) resolves exactly as the old
     mtime rule did, on both the engine and connector faces."""
-    from otus_cpp_11_spark.sources import _vt_version_at_timestamp
+    from otus_cpp_11_spark.sources import register_versioned_table_source
 
     tbl = str(tmp_path / "t")
     commit_version(spark, _mk(spark, 0, 10), tbl)
@@ -121,8 +122,20 @@ def test_legacy_markers_fall_back_to_mtime(spark, tmp_path):
     os.utime(marks[1], (3000.0, 3000.0))
     assert version_at_timestamp(spark, tbl, 2500.0) == 1
     assert version_at_timestamp(spark, tbl, 3500.0) == 2
-    assert _vt_version_at_timestamp(tbl, 2500.0) == 1
-    assert _vt_version_at_timestamp(tbl, 3500.0) == 2
+    assert version_at_or_after_timestamp(spark, tbl, 2500.0) == 2
+    register_versioned_table_source(spark)
+
+    def connector_rows(ts):
+        return (
+            spark.read.format("versioned_table")
+            .option("path", tbl)
+            .option("timestampAsOf", ts)
+            .load()
+            .count()
+        )
+
+    assert connector_rows("2500.0") == 10  # v1
+    assert connector_rows("3500.0") == 20  # v2
     with pytest.raises(FileNotFoundError, match="at or before"):
         version_at_timestamp(spark, tbl, 1500.0)
 
@@ -143,10 +156,7 @@ def test_cdf_timestamp_bounds(spark, tmp_path):
     the first commit at or after (inclusive lower bound), ts_to rounds
     DOWN to the last commit at or before — both via in-commit
     timestamps, proven by backdating every marker mtime."""
-    from otus_cpp_11_spark.ops.versioned import (
-        read_change_feed,
-        version_at_or_after_timestamp,
-    )
+    from otus_cpp_11_spark.ops.versioned import read_change_feed
 
     tbl = str(tmp_path / "t")
     commit_version(spark, _mk(spark, 0, 10), tbl)

@@ -22,6 +22,8 @@ from otus_cpp_11_spark.ops.versioned import (
     current_version,
     read_change_feed,
     read_version,
+    version_at_or_after_timestamp,
+    version_at_timestamp,
     version_header,
 )
 
@@ -277,7 +279,7 @@ def test_connector_faces_respect_txn_state(spark, roots, monkeypatch):
 
 
 def test_connector_fails_loudly_on_in_doubt(spark, roots, monkeypatch):
-    from otus_cpp_11_spark.sources import _vt_read_manifest
+    from otus_cpp_11_spark.sources import register_versioned_table_source
 
     a, b, troot = roots
     commit_version(spark, _df(spark, 0, 10).coalesce(1), a)
@@ -289,8 +291,30 @@ def test_connector_fails_loudly_on_in_doubt(spark, roots, monkeypatch):
     monkeypatch.setattr(time, "monotonic", time.monotonic)  # keep real
     # shrink the connector's poll window by pre-expiring: it polls up to
     # ~2 s then raises — acceptable in one test
-    with pytest.raises(RuntimeError, match="IN-DOUBT"):
-        _vt_read_manifest(a, 2)
+    register_versioned_table_source(spark)
+    with pytest.raises(Exception, match="IN-DOUBT"):
+        spark.read.format("versioned_table").option("path", a).load().count()
+
+
+def test_timestamp_lookup_never_decides_an_in_doubt_claim(
+    spark, roots, monkeypatch
+):
+    """Picking a version by timestamp reads raw headers only, in BOTH
+    directions: an in-doubt claim's ``commit_ts`` names its slot, and a
+    lookup must not force-abort the transaction (no final record, no
+    table-side seal written) — only a real snapshot read decides it."""
+    import glob
+
+    a, b, troot = roots
+    commit_version(spark, _df(spark, 0, 10).coalesce(1), a)
+    commit_version(spark, _df(spark, 0, 5).coalesce(1), b)
+    _crash_before_final(spark, monkeypatch, a, b, troot)
+    _wipe_txn_artifacts(troot, a, b)
+    cts = V._read_commit_header_raw(spark, a, "00000002")["commit_ts"]
+    assert version_at_timestamp(spark, a, cts) == 2
+    assert version_at_or_after_timestamp(spark, a, cts) == 2
+    assert not glob.glob(f"{troot}/txn-*.final")
+    assert not glob.glob(f"{a}/_commits/*.txnseal")
 
 
 def test_duplicate_table_rejected(spark, roots):

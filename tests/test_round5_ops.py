@@ -294,6 +294,62 @@ class TestLeakageSafeSplit:
         assert all(len(s) == 1 for s in by_group.values())
 
 
+def _curation_funnel_observed(spark, sf_dir):
+    """A quality-gated curation funnel whose stage accounting (docs and
+    tokens in, docs and tokens kept) rides the SAME job as the result:
+    Spark ``Observation``s attached in the lazy plan are computed by the
+    query's own tasks, so the counts cost no extra scan. The gate is
+    doc_quality_score's heuristic (same tokenizer and thresholds).
+    Returns (per-source result, {"input": obs, "kept": obs}); read each
+    ``obs.get`` after the first action on the result."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Observation
+
+    from otus_cpp_11_spark.catalog import load_table
+    from otus_cpp_11_spark.queries.text import (
+        QUALITY_MIN_STOP_RATIO,
+        QUALITY_MIN_TOKENS,
+        STOPWORDS,
+        _tokens,
+    )
+
+    def observed(df, name):
+        obs = Observation(name)
+        return df.observe(
+            obs, F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
+        ), obs
+
+    toks = _tokens()
+    scored, obs_in = observed(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "source",
+            F.size(toks).alias("n_tokens"),
+            F.size(F.filter(toks, lambda x: x.isin([*STOPWORDS]))).alias("n_stop"),
+        ),
+        "curation_input",
+    )
+    kept, obs_kept = observed(
+        scored.where(
+            (F.col("n_tokens") >= QUALITY_MIN_TOKENS)
+            & (
+                F.col("n_stop").cast("double") / F.col("n_tokens")
+                >= QUALITY_MIN_STOP_RATIO
+            )
+        ),
+        "curation_kept",
+    )
+    result = (
+        kept.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs_kept"),
+            F.sum("n_tokens").alias("total_tokens"),
+        )
+        .orderBy("source")
+    )
+    return result, {"input": obs_in, "kept": obs_kept}
+
+
 class TestObservedFunnel:
     def test_metrics_ride_the_single_action(self, spark):
         """Observation metrics must equal independently recomputed stage
@@ -301,9 +357,7 @@ class TestObservedFunnel:
         final frame (no per-metric re-scan jobs)."""
         import pyspark.sql.functions as F
 
-        from otus_cpp_11_spark.ops.observe import curation_funnel_observed
-
-        result, obs = curation_funnel_observed(spark, SF_SMOKE)
+        result, obs = _curation_funnel_observed(spark, SF_SMOKE)
         rows = result.collect()  # the one action
 
         got_in, got_kept = obs["input"].get, obs["kept"].get
