@@ -22,14 +22,30 @@ from pathlib import Path
 _SHUFFLE = "spark.sql.shuffle.partitions"
 
 
+def _positive_int(text: str) -> int:
+    """M and R below 1 are rejected here, before any Spark call: a session
+    built with zero shuffle partitions cannot start its SQL state."""
+    try:
+        value = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"invalid int value: {text!r}") from None
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
+    return value
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="otus-cpp-11-spark",
         description="Minimal unique prefix length over a line file (MapReduce flagship).",
     )
     p.add_argument("-i", "--input", required=True, help="input text file")
-    p.add_argument("-m", "--mappers", type=int, default=3, help="map parallelism (default 3)")
-    p.add_argument("-r", "--reducers", type=int, default=2, help="reduce parallelism (default 2)")
+    p.add_argument(
+        "-m", "--mappers", type=_positive_int, default=3, help="map parallelism (default 3)"
+    )
+    p.add_argument(
+        "-r", "--reducers", type=_positive_int, default=2, help="reduce parallelism (default 2)"
+    )
     p.add_argument("-d", "--debug", action="store_true", help="debug logging")
     p.add_argument("--out", default=None, help="optional output dir for iter{L}/result.txt files")
     p.add_argument(

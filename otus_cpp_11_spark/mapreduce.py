@@ -15,14 +15,19 @@ Spark-first realization — each reference stage maps onto the runtime:
 ==========================  =============================================
 reference (SURVEY.md §2)    here
 ==========================  =============================================
-split_file → M blocks (O1)  ``spark.read.text`` splits; ``repartition(M)``
+split_file → M blocks (O1)  ``textFile(path, minPartitions=M)`` splits;
+                            ``repartition(M)`` only when the split count
+                            is not M, and for DataFrame sources
 M mapper threads (O3)       ``rdd.flatMap(mapper)`` over M partitions
 per-mapper sort (O4/O5)     not needed pre-shuffle (sort-based shuffle)
-k-way merge shuffle (O6)    ``sortByKey(numPartitions=R)`` — range
-                            partitioning + per-partition sort ≡ one
+k-way merge shuffle (O6)    ``repartitionAndSortWithinPartitions(R)`` —
+                            range partitioning + per-partition sort ≡ one
                             globally sorted run cut into R aligned blocks
-align_blocks (O7)           free: the range partitioner never splits a key
-R reducer threads (O9)      ``mapPartitionsWithIndex(fold)``
+align_blocks (O7)           one sketch job before the shuffle: per
+                            partition a count and a seeded key reservoir,
+                            turned into R-1 strictly increasing bounds;
+                            ``bisect_left`` never splits a key
+R reducer threads (O9)      ``mapPartitions(fold)``
 AND-aggregate (O12)         driver ``all()`` over R partition votes
 ==========================  =============================================
 
@@ -40,7 +45,10 @@ semantics and the only one that scales.
 
 from __future__ import annotations
 
+import math
 import os
+import random
+from bisect import bisect_left
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
@@ -106,17 +114,18 @@ class MapReduceJob:
 
     def _lines(self, spark: SparkSession, source: str | DataFrame):
         if isinstance(source, DataFrame):
-            df = source
+            col = source.columns[0]
+            rdd = source.select(col).rdd.map(lambda row: row[0])
         else:
-            df = spark.read.text(source)
-        col = df.columns[0]
-        rdd = df.select(col).rdd.map(lambda row: row[0])
+            # the reference's split_file into M blocks: Hadoop input splits
+            rdd = spark.sparkContext.textFile(source, minPartitions=self.mappers)
         # M input partitions ≡ M mapper threads (src/runner.cpp:14-29).
         return rdd.repartition(self.mappers) if rdd.getNumPartitions() != self.mappers else rdd
 
     def _shuffled(self, spark: SparkSession, source: str | DataFrame):
         """map → globally-sorted range-partitioned pairs (the O6 shuffle +
-        O7 alignment contract, for free from sortByKey)."""
+        O7 alignment contract). Range bounds come from one sketch job;
+        ``sortByKey`` would run a count job and then a sample job."""
         if self._mapper is None:
             raise RuntimeError("set_mapper first")
         mapper = self._mapper
@@ -131,7 +140,10 @@ class MapReduceJob:
                 return iter(acc.items())
 
             pairs = pairs.mapPartitions(combine_partition)
-        return pairs.sortByKey(numPartitions=self.reducers)
+        bounds = _range_bounds(pairs, self.reducers) if self.reducers > 1 else []
+        return pairs.repartitionAndSortWithinPartitions(
+            self.reducers, lambda key: bisect_left(bounds, key)
+        )
 
     # -- public runs -------------------------------------------------------
 
@@ -150,19 +162,15 @@ class MapReduceJob:
             raise RuntimeError("set_reducer first")
         reducer = self._reducer
 
-        def fold(idx: int, it):
+        def fold(it):
+            # an empty partition votes true, like a reducer fed no pairs
             vote = True
-            seen = False
             for key, count in it:
-                seen = True
                 vote = reducer((key, count)) and vote
-            # empty partition votes true, like a reducer fed no pairs
-            yield (idx, vote if seen else True)
+            yield vote
 
-        votes_by_idx = dict(
-            self._shuffled(spark, source).mapPartitionsWithIndex(fold).collect()
-        )
-        votes = [votes_by_idx.get(i, True) for i in range(self.reducers)]
+        # one vote per range partition, in partition order
+        votes = self._shuffled(spark, source).mapPartitions(fold).collect()
         ok = all(votes)
         if output_directory is not None:
             red_dir = os.path.join(output_directory, "reducer")
@@ -187,6 +195,47 @@ class MapReduceJob:
         pairs = self._lines(spark, source).flatMap(mapper)
         reduced = pairs.reduceByKey(lambda a, b: a + b, numPartitions=self.reducers)
         return spark.createDataFrame(reduced, schema="key string, count long")
+
+
+def _range_bounds(pairs, reducers: int) -> list:
+    """R-1 strictly increasing keys that cut ``pairs`` into ``reducers``
+    ranges of about equal size, from one Spark job. Each partition returns
+    its pair count and a seeded reservoir of ⌈3·20·R/M⌉ keys, the sizing of
+    Spark's ``RangePartitioner``; a sampled key stands for count/len(sample)
+    pairs, and the bounds are the weighted R-quantiles with repeats
+    dropped, as in ``RangePartitioner.determineBounds``."""
+    size = math.ceil(3 * 20 * reducers / pairs.getNumPartitions())
+
+    def sketch(idx: int, it):
+        rng = random.Random(idx)
+        sample: list = []
+        n = 0
+        for key, _ in it:
+            if n < size:
+                sample.append(key)
+            else:
+                j = rng.randrange(n + 1)
+                if j < size:
+                    sample[j] = key
+            n += 1
+        yield n, sample
+
+    weighted = sorted(
+        (key, n / len(sample))
+        for n, sample in pairs.mapPartitionsWithIndex(sketch).collect()
+        for key in sample
+    )
+    step = sum(w for _, w in weighted) / reducers
+    bounds: list = []
+    cum, target = 0.0, step
+    for key, w in weighted:
+        if len(bounds) == reducers - 1:
+            break
+        cum += w
+        if cum >= target and (not bounds or key > bounds[-1]):
+            bounds.append(key)
+            target += step
+    return bounds
 
 
 def make_adjacent_dup_reducer() -> ReducerFn:

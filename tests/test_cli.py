@@ -69,3 +69,14 @@ def test_cli_main_leaves_caller_shuffle_partitions(spark, tmp_path, capsys):
     assert main(["-i", str(f), "-r", reducers]) == 0
     assert "Result = 1" in capsys.readouterr().out
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+
+
+@pytest.mark.parametrize("flag", ["-m", "-r"])
+def test_cli_rejects_nonpositive_parallelism_before_spark(spark, flag, capsys):
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    for value in ("0", "-1"):
+        with pytest.raises(SystemExit) as exc:
+            main(["-i", "lines.txt", flag, value])
+        assert exc.value.code == 2
+        assert "must be >= 1" in capsys.readouterr().err
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior

@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from otus_cpp_11_spark.mapreduce import (
     MapReduceJob,
@@ -21,6 +23,18 @@ INTS_ABS = [1, 6, 3, -7, 2, 15, -10, -1, 3, 2, -3, 7, -2, 15, 10]  # 7 unique |x
 
 def lines_df(spark, values):
     return spark.createDataFrame([(str(v),) for v in values], ["value"])
+
+
+def _assert_sorted_ranges(parts):
+    """The §3.3 shuffle contract on ``glom()`` output: every partition is
+    sorted by key, and (range partitioning) every key of a partition is
+    below every key of the next non-empty one, so equal keys never
+    straddle partitions (O7 align_blocks)."""
+    keys = [[k for k, _ in part] for part in parts if part]
+    for part in keys:
+        assert part == sorted(part)
+    for a, b in zip(keys, keys[1:]):
+        assert a[-1] < b[0]
 
 
 class TestReferenceProgram:
@@ -55,19 +69,7 @@ class TestFrameworkContract:
         job.set_mapper(lambda line: [(line, 1)])
         shuffled = job._shuffled(spark, df)
         assert shuffled.getNumPartitions() == 2
-        parts = shuffled.glom().collect()
-        seen_keys_per_part = []
-        for part in parts:
-            keys = [k for k, _ in part]
-            assert keys == sorted(keys)  # sorted within partition
-            seen_keys_per_part.append(set(keys))
-        # equal keys never straddle partitions (O7 align_blocks contract)
-        for i in range(len(seen_keys_per_part)):
-            for j in range(i + 1, len(seen_keys_per_part)):
-                assert not (seen_keys_per_part[i] & seen_keys_per_part[j])
-        # range partitioning: global order across partitions too
-        flat = [k for part in parts for k, _ in part]
-        assert flat == sorted(flat)
+        _assert_sorted_ranges(shuffled.glom().collect())
 
     def test_mapper_sees_every_line_once(self, spark):
         values = [f"line{i}" for i in range(100)]
@@ -172,3 +174,98 @@ class TestCombiner:
             combined.set_reducer(make_adjacent_dup_reducer())
             assert plain.run(spark, lines_numbers69).ok is want
             assert combined.run(spark, lines_numbers69).ok is want
+
+
+class TestRangeShuffle:
+    """The shuffle behind ``run``: one sketch job picks R-1 range bounds,
+    then ``repartitionAndSortWithinPartitions`` cuts R sorted ranges."""
+
+    @given(
+        keys=st.lists(st.text(alphabet="abé𝄞", max_size=3), max_size=40),
+        mappers=st.integers(1, 5),
+        reducers=st.integers(1, 5),
+    )
+    @settings(
+        max_examples=8,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    def test_partitions_are_sorted_disjoint_ranges(self, spark, keys, mappers, reducers):
+        job = MapReduceJob(mappers=mappers, reducers=reducers)
+        job.set_mapper(lambda line: [(line, 1)])
+        df = spark.createDataFrame([(k,) for k in keys], "value string")
+        parts = job._shuffled(spark, df).glom().collect()
+        assert len(parts) == reducers
+        _assert_sorted_ranges(parts)
+        assert [p for part in parts for p in part] == sorted((k, 1) for k in keys)
+
+    def test_empty_inputs_vote_true(self, spark, tmp_path):
+        empty = tmp_path / "empty.txt"
+        empty.write_text("")
+        for source in (str(empty), spark.createDataFrame([], "value string")):
+            job = MapReduceJob(mappers=3, reducers=4)
+            job.set_mapper(lambda line: [(line, 1)])
+            job.set_reducer(make_adjacent_dup_reducer())
+            result = job.run(spark, source)
+            assert result.ok is True
+            assert result.reducer_votes == [True] * 4
+
+    def test_more_reducers_than_distinct_keys(self, spark):
+        job = MapReduceJob(mappers=2, reducers=5)
+        job.set_mapper(lambda line: [(line, 1)])
+        parts = job._shuffled(spark, lines_df(spark, ["b", "a", "b", "a"])).glom().collect()
+        assert len(parts) == 5
+        _assert_sorted_ranges(parts)
+        assert sorted(p for part in parts for p in part) == [("a", 1)] * 2 + [("b", 1)] * 2
+        job.set_reducer(make_adjacent_dup_reducer())
+        result = job.run(spark, lines_df(spark, ["b", "a", "c"]))
+        assert result.ok is True and len(result.reducer_votes) == 5
+
+    def test_all_equal_keys_land_in_one_partition(self, spark):
+        job = MapReduceJob(mappers=3, reducers=3)
+        job.set_mapper(lambda line: [("same", 1)])
+        parts = job._shuffled(spark, lines_df(spark, range(50))).glom().collect()
+        assert sorted(len(part) for part in parts) == [0, 0, 50]
+        job.set_reducer(make_adjacent_dup_reducer())
+        assert job.run(spark, lines_df(spark, range(50))).reducer_votes.count(False) == 1
+
+    def test_sketch_bounds_balance_sorted_input(self, spark, tmp_path):
+        # a sorted file makes every input split a contiguous key range, so
+        # a sample biased to each split's head would skew the bounds
+        path = tmp_path / "sorted.txt"
+        path.write_text("".join(f"{i:05d}\n" for i in range(1200)))
+        job = MapReduceJob(mappers=3, reducers=4)
+        job.set_mapper(lambda line: [(line, 1)])
+        sizes = job._shuffled(spark, str(path)).glom().map(len).collect()
+        assert sum(sizes) == 1200
+        assert all(200 <= n <= 400 for n in sizes), sizes
+
+    @pytest.mark.parametrize("mappers", [1, 3, 5])
+    def test_path_source_splits_into_m_partitions_without_shuffle(
+        self, spark, tmp_path, mappers
+    ):
+        path = tmp_path / "lines.txt"
+        path.write_text("".join(f"line{i:04d}\n" for i in range(400)))
+        rdd = MapReduceJob(mappers=mappers)._lines(spark, str(path))
+        assert rdd.getNumPartitions() == mappers
+        lineage = rdd.toDebugString().decode()
+        assert "HadoopRDD" in lineage and "Shuffled" not in lineage
+        assert rdd.count() == 400
+
+    @pytest.mark.parametrize("reducers, jobs", [(1, 1), (2, 2), (4, 2)])
+    def test_one_run_launches_one_sketch_and_one_shuffle_job(
+        self, spark, tmp_path, reducers, jobs
+    ):
+        path = tmp_path / "lines.txt"
+        path.write_text("".join(f"{i:03d}\n" for i in range(120)))
+        job = MapReduceJob(mappers=3, reducers=reducers)
+        job.set_mapper(make_prefix_mapper(3))
+        job.set_reducer(make_adjacent_dup_reducer())
+        sc = spark.sparkContext
+        group = f"mapreduce-jobs-{reducers}"
+        sc.setJobGroup(group, "count the jobs of one run")
+        try:
+            assert job.run(spark, str(path)).ok is True
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
