@@ -5,6 +5,7 @@ mirroring FIXTURES.md §A/§C."""
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -25,6 +26,26 @@ def spark():
 # FIXTURES.md §A.1 — exact replica of /root/reference/test.txt: the 69
 # three-digit strings 111,121,...,391,411,...,801 (401 absent).
 NUMBERS69 = [str(n) for n in range(111, 802, 10) if n != 401]
+
+REFERENCE_TEST_TXT = Path("/root/reference/test.txt")
+REPLICA_TEST_TXT = Path(__file__).resolve().parent / "fixtures" / "test.txt"
+
+
+@pytest.fixture(scope="session")
+def golden_test_txt():
+    """Path of the reference's bundled test.txt: the reference checkout's
+    own file when it exists, else the committed byte-exact replica
+    tests/fixtures/test.txt (69 lines, 275 bytes, no final newline —
+    SURVEY.md §6). A missing or drifted replica fails here, never skips."""
+    replica = REPLICA_TEST_TXT.read_bytes()
+    assert replica == "\n".join(NUMBERS69).encode(), "replica drifted from NUMBERS69"
+    assert len(replica) == 275, f"replica is {len(replica)} bytes, not 275"
+    if REFERENCE_TEST_TXT.exists():
+        assert REFERENCE_TEST_TXT.read_bytes() == replica, (
+            "replica differs from the reference's test.txt"
+        )
+        return str(REFERENCE_TEST_TXT)
+    return str(REPLICA_TEST_TXT)
 
 
 @pytest.fixture(scope="session")

@@ -1,7 +1,9 @@
 """CLI parity test: the golden e2e of the reference binary
 (`Result = 2` on its bundled test.txt fixture, SURVEY.md §2.3.7) through
 our argparse surface, including the per-iteration output layout
-(iter{L}/result.txt with 0/1, mirroring src/runner.cpp:65)."""
+(iter{L}/result.txt with 0/1, mirroring src/runner.cpp:65). The fixture is
+read from /root/reference/test.txt when present and from the committed
+replica tests/fixtures/test.txt otherwise (conftest `golden_test_txt`)."""
 
 from __future__ import annotations
 
@@ -29,9 +31,9 @@ def test_parser_defaults_mirror_reference():
     assert (args.mappers, args.reducers, args.debug) == (3, 2, False)
 
 
-def test_cli_golden_result_and_iter_layout(spark, tmp_path, capsys):
+def test_cli_golden_result_and_iter_layout(spark, tmp_path, capsys, golden_test_txt):
     out = tmp_path / "out"
-    rc = main(["-i", "/root/reference/test.txt", "--out", str(out)])
+    rc = main(["-i", golden_test_txt, "--out", str(out)])
     assert rc == 0
     assert "Result = 2" in capsys.readouterr().out
     assert (out / "iter1" / "result.txt").read_text() == "0\n"

@@ -38,12 +38,14 @@ def _assert_sorted_ranges(parts):
 
 
 class TestReferenceProgram:
-    def test_golden_test_txt(self, spark, tmp_path):
+    def test_golden_test_txt(self, spark, tmp_path, golden_test_txt):
         """Reference e2e: test.txt → Result = 2; iter1 fails, iter2 passes
-        (out/iter{L}/result.txt mirror — SURVEY.md §5 golden)."""
+        (out/iter{L}/result.txt mirror — SURVEY.md §5 golden). The file is
+        /root/reference/test.txt when present, else the committed replica
+        tests/fixtures/test.txt."""
         out = str(tmp_path / "out")
         result = find_min_unique_prefix(
-            spark, "/root/reference/test.txt", mappers=3, reducers=2,
+            spark, golden_test_txt, mappers=3, reducers=2,
             output_directory=out,
         )
         assert result == 2

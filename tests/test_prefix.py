@@ -2,8 +2,9 @@
 
 Golden: the reference's bundled fixture test.txt (69 three-digit numbers)
 must yield minimal unique prefix length 2 — L=1 collides on shared first
-digits, L=2 is unique (/root/reference/test.txt; expected behavior SURVEY.md
-§2.3.7).
+digits, L=2 is unique (expected behavior SURVEY.md §2.3.7). The file is read
+from /root/reference/test.txt when present and from the committed replica
+tests/fixtures/test.txt otherwise (conftest `golden_test_txt`).
 """
 
 from __future__ import annotations
@@ -81,10 +82,10 @@ class TestAdversarial:
         assert got is None
         assert seen == [(1, False)]
 
-    def test_reference_test_txt_directly(self, spark):
-        """Read the actual reference fixture end-to-end via spark.read.text —
+    def test_reference_test_txt_directly(self, spark, golden_test_txt):
+        """Read the reference fixture file end-to-end via spark.read.text —
         the O1/O2 line-text source path (SURVEY.md §2 O1-O2)."""
-        df = spark.read.text("/root/reference/test.txt")
+        df = spark.read.text(golden_test_txt)
         assert min_unique_prefix_length(spark, df) == 2
 
 
