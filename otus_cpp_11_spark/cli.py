@@ -4,9 +4,13 @@ src/main.cpp:49), ``-d/--debug`` verbosity — running the flagship
 minimal-unique-prefix search (src/main.cpp:59-99) and printing
 ``Result = L`` exactly like the reference.
 
-M/R map to their Spark equivalents (SURVEY.md §1.4): M = input partitions,
-R = shuffle partitions. ``--out`` optionally writes per-iteration
-``iter{L}/result.txt`` files (0/1) mirroring the reference's output layout
+R maps to its Spark equivalent (SURVEY.md §1.4): R = shuffle partitions.
+M is accepted and validated for reference parity but is advisory on this
+DataFrame path: Spark sizes the input splits itself, the prefix plan
+range-sorts every line right after the read, and the answer does not
+depend on M, so no round-robin pre-shuffle to M partitions is paid.
+``--out`` optionally writes per-iteration ``iter{L}/result.txt`` files
+(0/1) mirroring the reference's output layout
 (src/runner.cpp:65), plus the final answer.
 
 Usage: ``python -m otus_cpp_11_spark.cli -i test.txt -m 3 -r 2``
@@ -41,7 +45,11 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("-i", "--input", required=True, help="input text file")
     p.add_argument(
-        "-m", "--mappers", type=_positive_int, default=3, help="map parallelism (default 3)"
+        "-m",
+        "--mappers",
+        type=_positive_int,
+        default=3,
+        help="map parallelism (default 3; advisory, Spark sizes the input splits)",
     )
     p.add_argument(
         "-r", "--reducers", type=_positive_int, default=2, help="reduce parallelism (default 2)"
@@ -86,7 +94,7 @@ def _run(spark, args: argparse.Namespace, log: logging.Logger) -> int:
 
     if not args.debug:
         spark.sparkContext.setLogLevel("ERROR")
-    lines = spark.read.text(args.input).repartition(args.mappers)
+    lines = spark.read.text(args.input)
     log.debug("input=%s mappers=%d reducers=%d", args.input, args.mappers, args.reducers)
 
     on_iter = None

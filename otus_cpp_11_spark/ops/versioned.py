@@ -75,7 +75,7 @@ import re
 import uuid
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -1028,7 +1028,6 @@ def _rewrite_matching_files(
                 )
                 dv_rows_added += len(idxs)
                 rewrite_set.discard(f)
-    carried = [f for f in prev_files if f not in rewrite_set]
     new_files: list[str] = []
     if rewrite_set:
         touched_df = _read_files_masked(
@@ -1053,12 +1052,9 @@ def _rewrite_matching_files(
     live_phys = {_phys(cmap, f.name) for f in schema.fields}
     scols = sorted({c for s in prev_stats.values() for c in s} & live_phys)
     bcols = _carried_bloom_cols(prev_stats, live_phys)
-    stats = {f: s for f, s in prev_stats.items() if f not in rewrite_set}
-    stats.update(
-        _collect_file_stats(spark, table, new_files, scols, bloom_cols=bcols)
+    new_stats = _collect_file_stats(
+        spark, table, new_files, scols, bloom_cols=bcols
     )
-    dvs = {f: d for f, d in prev_dvs.items() if f not in rewrite_set}
-    dvs.update(dv_out)
     hdr_meta = dict(meta or {})
     hdr_meta[f"{op}_io"] = {
         "prev_files": len(prev_files),
@@ -1086,40 +1082,25 @@ def _rewrite_matching_files(
             prefix="cdf",
             cmap=cmap,
         )
-    if stage_to is not None:
-        stage_to.update(
-            op=op,
-            schema=schema,
-            files=carried + new_files,
-            meta=hdr_meta,
-            stats=stats,
-            rows=prev_rows,
-            dvs=dvs,
-            version=cur + 1,
-        )
-        return cur + 1
     return _commit_retrying(
         spark,
         table,
         op,
         schema,
+        cur=cur,
+        header=header,
+        files=prev_files,
         touched=set(touched),
         rewrite_set=rewrite_set,
-        base_dvs={f: prev_dvs[f] for f in touched if f in prev_dvs},
-        based_files=prev_files,
         new_files=new_files,
-        new_file_stats={f: s for f, s in stats.items() if f in set(new_files)},
+        new_file_stats=new_stats,
         new_dvs=dv_out,
         hdr_meta=hdr_meta,
-        files_out=carried + new_files,
-        stats_out=stats,
-        rows_out=prev_rows,
-        dvs_out=dvs,
-        target=cur + 1,
         max_retries=max_retries,
         added_check=_dml_added_check(
             spark, table, schema, cond, bounds, op, cmap=cmap
         ),
+        stage_to=stage_to,
     )
 
 
@@ -2233,39 +2214,30 @@ def commit_transaction(
         staged = []
         for table, df, stats_cols, bloom_cols in norm:
             cur = current_version(spark, table)
+            header, prev_files = None, []
             if cur is None:
-                written = _write_data_dir(spark, df, table, 1)
-                stats = _collect_file_stats(
-                    spark, table, written, stats_cols or [],
+                schema, pcmap = df.schema, {}
+            else:
+                header, prev_files = read_manifest(spark, table, cur)
+                df = _upcast_narrow_writer(df, header)
+                _require_same_schema(df, header, table, "commit_transaction")
+                schema = StructType.fromJson(json.loads(header["schema"]))
+                pcmap = manifest_cmap(header)
+            written = _write_data_dir(
+                spark, df, table, (cur or 0) + 1, cmap=pcmap
+            )
+            st_a: dict = {}
+            _commit_retrying(
+                spark, table, "append", schema, cur=cur, header=header,
+                files=prev_files, touched=set(), rewrite_set=set(),
+                new_files=written,
+                new_file_stats=_collect_file_stats(
+                    spark, table, written, stats_cols or [], cmap=pcmap,
                     bloom_cols=bloom_cols,
-                )
-                staged.append(
-                    (table, 1, df.schema, written, stats, None, None)
-                )
-                continue
-            header, prev_files = read_manifest(spark, table, cur)
-            df = _upcast_narrow_writer(df, header)
-            _require_same_schema(df, header, table, "commit_transaction")
-            committed = StructType.fromJson(json.loads(header["schema"]))
-            pcmap = manifest_cmap(header)
-            written = _write_data_dir(spark, df, table, cur + 1, cmap=pcmap)
-            new_stats = _collect_file_stats(
-                spark, table, written, stats_cols or [], cmap=pcmap,
-                bloom_cols=bloom_cols,
+                ),
+                new_dvs={}, hdr_meta=hdr_meta, stage_to=st_a,
             )
-            stats = dict(manifest_stats(header))
-            stats.update(new_stats)
-            staged.append(
-                (
-                    table,
-                    cur + 1,
-                    committed,
-                    prev_files + written,
-                    stats,
-                    manifest_rows(header),
-                    dict(manifest_dvs(header)),
-                )
-            )
+            staged.append((table, st_a))
         # PREPARE (deletes): stage touched-file discovery, DVs/rewrites
         # and stats now; the marker claim happens with the appends'
         def _del_rewrite(df, cond):
@@ -2299,34 +2271,15 @@ def commit_transaction(
         # CLAIM: rapid marker renames, in sorted-table order over all
         # shapes (appends, staged deletes and staged upserts contend
         # deterministically)
-        claims = [
-            (
-                table,
-                lambda t=table, v=v, schema=schema, files=files,
-                stats=stats, rows=rows, dvs=dvs: _commit(
-                    spark, t, v, "append", schema, files, hdr_meta,
-                    stats, rows=rows, dvs=dvs, checkpoint=False, txn=txn,
-                ),
-                v,
+        for table, st in sorted(
+            staged + del_staged + ups_staged, key=lambda c: c[0]
+        ):
+            _commit(
+                spark, table, st["version"], st["op"], st["schema"],
+                st["files"], st["meta"], st["stats"], rows=st["rows"],
+                dvs=st["dvs"], checkpoint=False, txn=txn,
             )
-            for table, v, schema, files, stats, rows, dvs in staged
-        ] + [
-            (
-                table,
-                lambda t=table, st=st: _commit(
-                    spark, t, st["version"], st["op"], st["schema"],
-                    st["files"], st["meta"], st["stats"],
-                    rows=st["rows"], dvs=st["dvs"],
-                    checkpoint=False, txn=txn,
-                ),
-                st["version"],
-            )
-            for table, st in del_staged + ups_staged
-        ]
-        claims.sort(key=lambda c: c[0])
-        for table, claim, v in claims:
-            claim()
-            versions[table] = v
+            versions[table] = st["version"]
     except Exception:
         # abort the whole transaction: already-claimed slots replay as
         # no-ops the moment the abort record lands (best effort — if we
@@ -3318,8 +3271,7 @@ def commit_append(
                 spark, table, written, stats_cols or [], cmap=pcmap,
                 bloom_cols=bloom_cols,
             )
-        stats = dict(manifest_stats(header))
-        stats.update(new_stats)
+        nxt = _next_manifest(header, prev_files, set(), written, new_stats, {})
         try:
             return _commit(
                 spark,
@@ -3327,11 +3279,11 @@ def commit_append(
                 cur + 1,
                 "append",
                 schema,
-                prev_files + written,
+                nxt["files"],
                 meta,
-                stats,
-                rows=manifest_rows(header),
-                dvs=dict(manifest_dvs(header)),
+                nxt["stats"],
+                rows=nxt["rows"],
+                dvs=nxt["dvs"],
             )
         except CommitConflict:
             if attempt >= max_retries:
@@ -3427,34 +3379,23 @@ def commit_upsert(
                 spark.createDataFrame([], inserts.schema), inserts
             )
         files = _write_data_dir(spark, inserts, table, 1)
-        stats = _collect_file_stats(spark, table, files, scols)
-        if stage_to is not None:  # txn staging: see _rewrite_matching_files
-            stage_to.update(
-                op="upsert", schema=inserts.schema, files=files,
-                meta=dict(meta or {}), stats=stats, rows=None, dvs=None,
-                version=1,
-            )
-            return 1
         return _commit_retrying(
             spark,
             table,
             "upsert",
             inserts.schema,
+            cur=None,
+            header=None,
+            files=[],
             touched=set(),
             rewrite_set=set(),
-            base_dvs={},
-            based_files=[],
             new_files=files,
-            new_file_stats=stats,
+            new_file_stats=_collect_file_stats(spark, table, files, scols),
             new_dvs={},
             hdr_meta=dict(meta or {}),
-            files_out=files,
-            stats_out=stats,
-            rows_out={},
-            dvs_out={},
-            target=1,
             max_retries=max_retries,
             added_check=_upsert_added_check(spark, table, df, keys),
+            stage_to=stage_to,
         )
     header, prev_files = read_manifest(spark, table, cur)
     df = _upcast_narrow_writer(df, header)  # widened table, narrow frame
@@ -3489,7 +3430,6 @@ def commit_upsert(
         prev_dvs,
         cmap=cmap,
     )
-    untouched = [f for f in prev_files if f not in touched]
     if touched:
         stored_touched = _read_files_masked(
             spark, table, schema, sorted(touched), prev_dvs, cmap=cmap
@@ -3541,8 +3481,6 @@ def commit_upsert(
     new_file_stats = _collect_file_stats(
         spark, table, new_files, scols, cmap=cmap, bloom_cols=bcols
     )
-    stats = {f: s for f, s in prev_stats.items() if f not in touched}
-    stats.update(new_file_stats)
     hdr_meta = dict(meta or {})
     hdr_meta["upsert_io"] = {
         "prev_files": len(prev_files),
@@ -3555,32 +3493,31 @@ def commit_upsert(
         # in hand and persist them as change files the header references
         # ("cdf") — readers then serve the feed at O(change bytes) with
         # ZERO joins, instead of reconstructing diffs from snapshots.
-        # All four relations are delta-bounded. A stored key the
-        # merge_fn dropped from its output is a DELETE (read-modify-
-        # write can shrink state); pre/post pairs are emitted for every
-        # live matched key, value-changed or not — Delta MERGE does the
-        # same (a touched key IS an update).
-        ct = "_change_type"
-        rkeys = replacement.select(*keys).distinct()
-        mkeys = live_matched.select(*keys).distinct()
+        # ONE pass over the delta-bounded union: live matched rows are
+        # tagged 0 (pre), replacement rows 1 (post), and a key seen on
+        # both sides is an update pair, pre-only a DELETE (read-modify-
+        # write can shrink state: merge_fn dropped the key), post-only
+        # an INSERT. Pre/post pairs are emitted for every live matched
+        # key, value-changed or not — Delta MERGE does the same (a
+        # touched key IS an update). The window groups NULL keys where
+        # a join never matches them; that is safe because live_matched
+        # comes from an equality semi-join and never holds a NULL key
+        # component, so a NULL-keyed replacement row is an insert.
+        ct, side = "_change_type", "__cdf_side"
+        w = Window.partitionBy(*keys)
+        both = F.min(side).over(w) != F.max(side).over(w)
+        pre = F.col(side) == 0
         changes = (
-            live_matched.join(rkeys, keys, "left_semi")
-            .withColumn(ct, F.lit("update_preimage"))
-            .unionByName(
-                live_matched.join(rkeys, keys, "left_anti").withColumn(
-                    ct, F.lit("delete")
-                )
+            live_matched.withColumn(side, F.lit(0))
+            .unionByName(replacement.withColumn(side, F.lit(1)))
+            .withColumn(
+                ct,
+                F.when(both & pre, "update_preimage")
+                .when(both, "update_postimage")
+                .when(pre, "delete")
+                .otherwise("insert"),
             )
-            .unionByName(
-                replacement.join(mkeys, keys, "left_semi").withColumn(
-                    ct, F.lit("update_postimage")
-                )
-            )
-            .unionByName(
-                replacement.join(mkeys, keys, "left_anti").withColumn(
-                    ct, F.lit("insert")
-                )
-            )
+            .drop(side)
         )
         if tomb_keys is not None:
             changes = changes.unionByName(
@@ -3594,44 +3531,67 @@ def commit_upsert(
             spark, changes, table, cur + 1, keep_empty=False, prefix="cdf",
             cmap=cmap,
         )
-    if stage_to is not None:
-        # txn staging (r12): everything written, nothing committed —
-        # commit_transaction claims the slot; the claim's create-once
-        # rename is the same OCC guarantee a lone merge has at
-        # max_retries=0 (an interleaved commit takes the slot first and
-        # aborts the whole transaction)
-        stage_to.update(
-            op="upsert",
-            schema=schema,
-            files=untouched + new_files,
-            meta=hdr_meta,
-            stats=stats,
-            rows=manifest_rows(header),
-            dvs={f: d for f, d in prev_dvs.items() if f not in touched},
-            version=cur + 1,
-        )
-        return cur + 1
+    # txn staging (r12, stage_to): everything written, nothing committed —
+    # commit_transaction claims the slot; the claim's create-once rename
+    # is the same OCC guarantee a lone merge has at max_retries=0 (an
+    # interleaved commit takes the slot first and aborts the whole
+    # transaction)
     return _commit_retrying(
         spark,
         table,
         "upsert",
         schema,
+        cur=cur,
+        header=header,
+        files=prev_files,
         touched=touched,
         rewrite_set=touched,
-        base_dvs={f: prev_dvs[f] for f in touched if f in prev_dvs},
-        based_files=prev_files,
         new_files=new_files,
         new_file_stats=new_file_stats,
         new_dvs={},
         hdr_meta=hdr_meta,
-        files_out=untouched + new_files,
-        stats_out=stats,
-        rows_out=manifest_rows(header),
-        dvs_out={f: d for f, d in prev_dvs.items() if f not in touched},
-        target=cur + 1,
         max_retries=max_retries,
         added_check=_upsert_added_check(spark, table, df, keys),
+        stage_to=stage_to,
     )
+
+
+def _next_manifest(
+    header: dict | None,
+    files: list[str],
+    rewrite_set: set,
+    new_files: list[str],
+    new_stats: dict,
+    new_dvs: dict,
+) -> dict:
+    """THE next-manifest rule of every rewrite commit: the parent's
+    ``files`` minus ``rewrite_set`` (the files this commit physically
+    REPLACED) plus ``new_files``; the parent's stats and deletion
+    vectors carried for every file kept, this commit's ``new_stats`` /
+    ``new_dvs`` overlaid last. Row counts carry whole — ``_commit``
+    keeps only the referenced files' entries and footer-reads the rest.
+    ``header`` None is the empty parent of a table's first commit."""
+    parent = header or {}
+    return {
+        "files": [f for f in files if f not in rewrite_set] + list(new_files),
+        "stats": {
+            **{
+                f: s
+                for f, s in manifest_stats(parent).items()
+                if f not in rewrite_set
+            },
+            **new_stats,
+        },
+        "rows": manifest_rows(parent),
+        "dvs": {
+            **{
+                f: d
+                for f, d in manifest_dvs(parent).items()
+                if f not in rewrite_set
+            },
+            **new_dvs,
+        },
+    }
 
 
 def _commit_retrying(
@@ -3640,28 +3600,37 @@ def _commit_retrying(
     op: str,
     schema: StructType,
     *,
+    cur: int | None,
+    header: dict | None,
+    files: list[str],
     touched: set,
     rewrite_set: set,
-    base_dvs: dict,
-    based_files: list[str],
     new_files: list[str],
     new_file_stats: dict,
     new_dvs: dict,
     hdr_meta: dict,
-    files_out: list[str],
-    stats_out: dict,
-    rows_out: dict,
-    dvs_out: dict,
-    target: int,
-    max_retries: int,
+    max_retries: int = 0,
     added_check=None,
+    stage_to: dict | None = None,
 ) -> int:
-    """Commit already-performed work, resolving version-number conflicts
-    by Delta's read-set/write-set rule — ONE implementation behind
-    ``commit_upsert``, ``commit_delete``, ``commit_update`` and
-    ``commit_compaction`` (r8 verdict #1: every streaming maintainer now
-    commits per micro-batch, so predicate DML races maintainers
-    constantly and must not die permanently on ``CommitConflict``).
+    """Commit already-performed work as version ``cur + 1`` of the
+    parent (``cur``, ``header``, ``files``; None/None/[] for a table's
+    first commit), resolving version-number conflicts by Delta's
+    read-set/write-set rule. ONE implementation behind every rewrite
+    commit: ``commit_upsert``, predicate DML (``commit_delete`` /
+    ``commit_update``), and the layout ops ``commit_compaction``,
+    ``commit_apply_dvs`` and ``commit_autocompact`` (r8 verdict #1:
+    every streaming maintainer commits per micro-batch, so predicate DML
+    races maintainers constantly and must not die permanently on
+    ``CommitConflict``). Every attempt's manifest — the first and each
+    restage — comes from ``_next_manifest``. ``commit_append`` keeps
+    its own loop: under ``merge_schema`` its retry accepts the
+    PRE-evolution parent schema, which the strict check below refuses.
+
+    ``stage_to`` (transaction staging, r12): nothing is committed — the
+    ``_commit`` arguments land in the dict and the would-be version is
+    returned; ``commit_transaction`` claims the slot for its staged
+    appends, deletes and upserts alike.
 
     The restage reuses the already-written data files and is valid only
     when the interleaved commits provably did not invalidate what this
@@ -3670,10 +3639,10 @@ def _commit_retrying(
     * the schema is unchanged;
     * every file in ``touched`` (the commit's READ SET: files it rewrote
       OR attached a deletion vector to) is still referenced by the new
-      parent with the SAME deletion vector it was read under —
-      ``base_dvs`` — because the rewrite/DV math was computed against
-      that mask (a concurrently-attached DV would be resurrected by the
-      rewrite, a concurrently-merged DV would be clobbered by ours);
+      parent with the SAME deletion vector it was read under, because
+      the rewrite/DV math was computed against that mask (a
+      concurrently-attached DV would be resurrected by the rewrite, a
+      concurrently-merged DV would be clobbered by ours);
     * ``added_check(nheader, added_files, newcur)`` — the op-specific
       read-PREDICATE half: an upsert raises when an added file's key
       extents may contain a merge key; predicate DML raises when an
@@ -3681,15 +3650,26 @@ def _commit_retrying(
       run after the interleave would have touched those rows); pure
       layout ops (OPTIMIZE) pass None — concurrent appends compose.
 
-    On success the restage is O(1) metadata against the new parent:
-    ``files_out`` = new parent minus ``rewrite_set`` (the files this
-    commit physically REPLACED — for a DV-only delete this is empty and
-    every parent file is carried) plus ``new_files``; parent metadata is
-    carried for everything else and ``new_dvs`` (DVs this commit
-    attaches) overlays last — valid because the touched-file check just
-    proved their base DVs unchanged."""
+    On success the restage is O(1) metadata against the new parent: for
+    a DV-only delete ``rewrite_set`` is empty and every parent file is
+    carried; ``new_dvs`` overlays last — valid because the touched-file
+    check just proved their base DVs unchanged."""
+    target = (cur or 0) + 1
+    base_dvs = {
+        f: d for f, d in manifest_dvs(header or {}).items() if f in touched
+    }
     attempt = 0
     while True:
+        nxt = _next_manifest(
+            header, files, rewrite_set, new_files, new_file_stats, new_dvs
+        )
+        if stage_to is not None:
+            stage_to.update(
+                op=op, schema=schema, files=nxt["files"], meta=hdr_meta,
+                stats=nxt["stats"], rows=nxt["rows"], dvs=nxt["dvs"],
+                version=target,
+            )
+            return target
         try:
             return _commit(
                 spark,
@@ -3697,11 +3677,11 @@ def _commit_retrying(
                 target,
                 op,
                 schema,
-                files_out,
+                nxt["files"],
                 hdr_meta,
-                stats_out,
-                rows=rows_out,
-                dvs=dvs_out,
+                nxt["stats"],
+                rows=nxt["rows"],
+                dvs=nxt["dvs"],
             )
         except CommitConflict:
             if attempt >= max_retries:
@@ -3720,9 +3700,8 @@ def _commit_retrying(
                 "the table schema; redo the operation against version "
                 f"{newcur}"
             )
-        nset = set(nfiles)
         ndvs = manifest_dvs(nheader)
-        if not touched <= nset or any(
+        if not touched <= set(nfiles) or any(
             ndvs.get(f) != base_dvs.get(f) for f in touched
         ):
             raise CommitConflict(
@@ -3731,23 +3710,13 @@ def _commit_retrying(
                 "operation had read (write-write conflict); redo it "
                 f"against version {newcur}"
             )
-        based = set(based_files)
+        based = set(files)
         added = [f for f in nfiles if f not in based]
         if added and added_check is not None:
             added_check(nheader, added, newcur)
-        # compose: the new parent minus this op's rewrites, plus the
-        # replacement files already written — O(1) metadata, no data IO
-        based_files = nfiles
-        files_out = [f for f in nfiles if f not in rewrite_set] + new_files
-        stats_out = {
-            f: s
-            for f, s in manifest_stats(nheader).items()
-            if f not in rewrite_set
-        }
-        stats_out.update(new_file_stats)
-        rows_out = manifest_rows(nheader)
-        dvs_out = {f: d for f, d in ndvs.items() if f not in rewrite_set}
-        dvs_out.update(new_dvs)
+        # compose against the new parent: the next loop turn rebuilds
+        # the manifest from it, reusing the files already written
+        header, files, target = nheader, nfiles, newcur + 1
         # keep the audited pruning accounting honest on a restage (r7
         # advice: the original op_io counted against the OLD parent):
         # annotate rather than silently re-publish stale numbers.
@@ -3765,7 +3734,6 @@ def _commit_retrying(
                     "restaged_parent": newcur,
                     "restaged_parent_files": len(nfiles),
                 }
-        target = newcur + 1
 
 
 def _upsert_added_check(spark, table, df, keys):
@@ -4080,9 +4048,12 @@ def commit_compaction(
     ``zorder=True`` (exactly two integer cluster columns) clusters on
     their Morton interleave instead — Delta's OPTIMIZE ZORDER BY — so
     extents tighten on BOTH columns at once and conjunctive 2-D
-    predicates prune multiplicatively (see ops.zorder). The
-    header records {files_before, files_selected, files_after, rows} so
-    the bin-packing claim is auditable per commit."""
+    predicates prune multiplicatively (see ops.zorder). The selected
+    files' other stat and Bloom columns are re-recorded too (the shared
+    ``_layout_rewrite_commit`` tail), so pruning on them and point-lookup
+    skipping survive the rewrite. The header records {files_before,
+    files_selected, files_after, rows} so the bin-packing claim is
+    auditable per commit."""
     cur = current_version(spark, table)
     if cur is None:
         raise FileNotFoundError(f"versioned table {table!r} has no commits")
@@ -4135,28 +4106,8 @@ def commit_compaction(
             # metadata_count(strict=True)), and a lone DV'd file is
             # rewritten to apply its deletion vector.
             return cur
-    sel = set(selected)
-    carried = [f for f in prev_files if f not in sel]
-    cmap = manifest_cmap(header)
-    df = (
-        _read_files_masked(spark, table, schema, selected, dvs_map, cmap=cmap)
-        if selected
-        else spark.createDataFrame([], schema)
-    )
     if zorder:
-        # OPTIMIZE ZORDER BY (Delta): cluster on the round-robin Morton
-        # interleave of the N cluster columns' normalized bucket ids
-        # instead of their lexicographic order — every output file's
-        # extents become a tight hyper-rectangle <= 1/2^Z_BITS of EACH
-        # bucketed domain, so scan_version prunes conjunctive
-        # predicates on every dimension (a lexicographic sort clusters
-        # the leading column and leaves the others scanning
-        # everything). Pure integer math shared with the layout planner
-        # (ops.zorder); the count and bounds come from ONE metadata
-        # pass, inlined as literals.
         from pyspark.sql.types import IntegralType
-
-        from otus_cpp_11_spark.ops.zorder import Z_BITS, zn_interleave
 
         if len(cluster_cols) < 2:
             raise ValueError(
@@ -4179,6 +4130,32 @@ def commit_compaction(
                 "columns present in the schema; offending/missing: "
                 f"{bad or sorted(want - set(have))!r}"
             )
+    acct = {"rows": 0}
+
+    def pack(df):
+        df = df.drop("__f")
+        if not zorder:
+            n = acct["rows"] = df.count()
+            n_out = max(1, -(-n // max_rows_per_file))
+            return (
+                df.repartitionByRange(n_out, *cluster_cols).sortWithinPartitions(
+                    *cluster_cols
+                )
+                if n
+                else df.coalesce(1)
+            )
+        # OPTIMIZE ZORDER BY (Delta): cluster on the round-robin Morton
+        # interleave of the N cluster columns' normalized bucket ids
+        # instead of their lexicographic order — every output file's
+        # extents become a tight hyper-rectangle <= 1/2^Z_BITS of EACH
+        # bucketed domain, so scan_version prunes conjunctive
+        # predicates on every dimension (a lexicographic sort clusters
+        # the leading column and leaves the others scanning
+        # everything). Pure integer math shared with the layout planner
+        # (ops.zorder); the count and bounds come from ONE metadata
+        # pass, inlined as literals.
+        from otus_cpp_11_spark.ops.zorder import Z_BITS, zn_interleave
+
         # the row count the bin-packing needs and every column's bounds
         # in a single 1-row aggregate (the non-zorder path's plain
         # count() would make this a second full read)
@@ -4187,7 +4164,8 @@ def commit_compaction(
             aggs.append(F.min(df[c]).alias(f"__lo{i}"))
             aggs.append(F.max(df[c]).alias(f"__hi{i}"))
         row = df.agg(*aggs).first()
-        n, n_out = row["__n"], max(1, -(-row["__n"] // max_rows_per_file))
+        n = acct["rows"] = row["__n"]
+        n_out = max(1, -(-n // max_rows_per_file))
         buckets = 2**Z_BITS
         # bucket id = (c div step) - (lo div step), clamped to the top
         # bucket: WIDTH-FIRST division (r8 advice) — the old
@@ -4226,63 +4204,26 @@ def commit_compaction(
         # only 2^(N*Z_BITS) distinct values, and without tie-breaks a
         # large table would silently cap at that many output files,
         # each far over max_rows_per_file
-        packed = (
+        return (
             proj.withColumn("__zv", zn_interleave(pcols))
             .repartitionByRange(n_out, "__zv", *cluster_cols)
             .sortWithinPartitions("__zv", *cluster_cols)
             .drop(*pcols, "__zv")
         ) if n else df.coalesce(1)
-    else:
-        n = df.count()
-        n_out = max(1, -(-n // max_rows_per_file))
-        packed = (
-            df.repartitionByRange(n_out, *cluster_cols).sortWithinPartitions(
-                *cluster_cols
-            )
-            if n
-            else df.coalesce(1)
-        )
-    new_files = _write_data_dir(spark, packed, table, cur + 1, cmap=cmap)
-    car = set(carried)
-    stats = {f: s for f, s in manifest_stats(header).items() if f in car}
-    stats.update(
-        _collect_file_stats(spark, table, new_files, cluster_cols, cmap=cmap)
-    )
-    hdr_meta = dict(meta or {})
-    hdr_meta["optimize_io"] = {
-        "files_before": len(prev_files),
-        "files_selected": len(selected),
-        "files_after": len(carried) + len(new_files),
-        "rows": n,
-    }
-    new_stats = {f: s for f, s in stats.items() if f not in car}
-    # added_check=None: OPTIMIZE has no read PREDICATE — a concurrent
-    # append's files simply are not compacted this round (Delta's rule:
-    # layout ops never conflict with appends); the touched-file check
-    # still rejects a concurrent rewrite/DV of any selected file, whose
-    # rows this rewrite already re-emitted from the OLD mask.
-    return _commit_retrying(
+
+    return _layout_rewrite_commit(
         spark,
         table,
-        "optimize",
-        schema,
-        touched=sel,
-        rewrite_set=sel,
-        base_dvs={f: dvs_map[f] for f in sel if f in dvs_map},
-        based_files=prev_files,
-        new_files=new_files,
-        new_file_stats=new_stats,
-        new_dvs={},
-        hdr_meta=hdr_meta,
-        files_out=carried + new_files,
-        stats_out=stats,
-        rows_out=manifest_rows(header),
-        # compaction APPLIED the selected files' DVs (the rewrite read
-        # was masked); only carried files may keep theirs
-        dvs_out={f: d for f, d in dvs_map.items() if f not in sel},
-        target=cur + 1,
-        max_retries=max_retries,
-        added_check=None,
+        cur,
+        header,
+        prev_files,
+        selected,
+        pack,
+        "optimize_io",
+        acct,
+        meta,
+        max_retries,
+        cluster_cols=cluster_cols,
     )
 
 
@@ -4298,44 +4239,44 @@ def _layout_rewrite_commit(
     io_extra: dict,
     meta: dict | None,
     max_retries: int,
+    cluster_cols: list[str] = (),
 ) -> int:
-    """Shared tail of the unattended layout-maintenance ops
-    (``commit_apply_dvs``, ``commit_autocompact`` — r10 review: two
-    hand-copied tails had already diverged on a bug): read the selected
-    files masked, apply ``transform(df)`` (receives ``__f`` = source
-    path for grouping, must drop it), write, re-record stats over the
+    """Shared tail of the layout-maintenance ops (``commit_compaction``,
+    ``commit_apply_dvs``, ``commit_autocompact`` — r10 review: hand-copied
+    tails had already diverged on a bug, and compaction's copy later shed
+    Bloom filters): read the selected files masked, apply
+    ``transform(df)`` (receives ``__f`` = source path for grouping, must
+    drop it), write, re-record stats over ``cluster_cols`` plus the
     selected files' stat columns INTERSECTED with the current physical
     schema (a dropped column's burned stats must not be re-collected
-    from files that no longer have it), and commit as ``optimize``
-    under the OCC retry with the op's own ``{io_key}`` accounting."""
+    from files that no longer have it) and their Bloom columns, and
+    commit as ``optimize`` under the OCC retry with the op's own
+    ``{io_key}`` accounting. ``transform`` runs before the accounting is
+    rendered, so values it writes into ``io_extra`` are recorded."""
     schema = StructType.fromJson(json.loads(header["schema"]))
     cmap = manifest_cmap(header)
-    dvs_map = manifest_dvs(header)
     sel = set(selected)
-    carried = [f for f in prev_files if f not in sel]
     df = _read_files_masked(
-        spark, table, schema, selected, dvs_map, path_col="__f", cmap=cmap
+        spark, table, schema, selected, manifest_dvs(header), path_col="__f",
+        cmap=cmap,
     )
-    out = transform(df)
-    new_files = _write_data_dir(spark, out, table, cur + 1, cmap=cmap)
+    new_files = _write_data_dir(spark, transform(df), table, cur + 1, cmap=cmap)
     all_stats = manifest_stats(header)
+    sel_stats = {f: all_stats[f] for f in selected if f in all_stats}
     live_phys = {_phys(cmap, f.name) for f in schema.fields}
     stat_cols = sorted(
-        {c for f in selected for c in (all_stats.get(f) or {})} & live_phys
+        ({c for s in sel_stats.values() for c in s} & live_phys)
+        | {_phys(cmap, c) for c in cluster_cols}
     )
-    bcols = _carried_bloom_cols(
-        {f: all_stats[f] for f in selected if f in all_stats}, live_phys
-    )
-    stats = {f: st for f, st in all_stats.items() if f in set(carried)}
     new_stats = _collect_file_stats(
-        spark, table, new_files, stat_cols, bloom_cols=bcols
+        spark, table, new_files, stat_cols,
+        bloom_cols=_carried_bloom_cols(sel_stats, live_phys),
     )
-    stats.update(new_stats)
     hdr_meta = dict(meta or {})
     hdr_meta[io_key] = {
         "files_before": len(prev_files),
         "files_selected": len(selected),
-        "files_after": len(carried) + len(new_files),
+        "files_after": len(prev_files) - len(sel) + len(new_files),
         **io_extra,
     }
     return _commit_retrying(
@@ -4343,20 +4284,23 @@ def _layout_rewrite_commit(
         table,
         "optimize",
         schema,
+        cur=cur,
+        header=header,
+        files=prev_files,
         touched=sel,
         rewrite_set=sel,
-        base_dvs={f: dvs_map[f] for f in sel if f in dvs_map},
-        based_files=prev_files,
         new_files=new_files,
         new_file_stats=new_stats,
+        # the selected files' DVs were APPLIED (the read is masked); only
+        # carried files keep theirs
         new_dvs={},
         hdr_meta=hdr_meta,
-        files_out=carried + new_files,
-        stats_out=stats,
-        rows_out=manifest_rows(header),
-        dvs_out={f: d for f, d in dvs_map.items() if f not in sel},
-        target=cur + 1,
         max_retries=max_retries,
+        # OPTIMIZE has no read PREDICATE: a concurrent append's files are
+        # simply not compacted this round (Delta's rule: layout ops never
+        # conflict with appends); the touched-file check still rejects a
+        # concurrent rewrite/DV of any selected file, whose rows this
+        # rewrite already re-emitted from the OLD mask
         added_check=None,
     )
 

@@ -1430,8 +1430,8 @@ def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers rely on.
 
     Scale: the feed read is one marker read per version plus the change
-    files themselves; the write-side classification joins are all
-    delta-bounded (see commit_upsert). Reference parity: extension
+    files themselves; the write-side classification is one window pass
+    over delta-bounded relations (see commit_upsert). Reference parity: extension
     mandate (the reference has no table format at all)."""
     from otus_cpp_11_spark.ops.versioned import read_change_feed
 

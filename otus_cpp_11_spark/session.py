@@ -82,6 +82,13 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    if shuffle_partitions < 1:
+        # checked before the builder runs: a fresh session built with 0
+        # cannot instantiate its SQL state and hangs instead of raising
+        raise ValueError(
+            f"shuffle_partitions must be >= 1, got {shuffle_partitions} "
+            "(argument or SPARK_GRAFT_SHUFFLE)"
+        )
     # Python workers deserialize custom DataSource classes BY REFERENCE
     # (cloudpickle pickles module-level classes as imports), so the
     # package dir must be importable in the worker regardless of the

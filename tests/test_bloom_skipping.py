@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from otus_cpp_11_spark.ops.versioned import (
     commit_append,
+    commit_compaction,
     commit_delete,
     commit_version,
     read_manifest,
@@ -106,6 +107,38 @@ def test_rtbf_point_delete_then_lookup_and_bloom_carried(spark, table):
     assert got.count() == 0
     got2, _ = scan_version(spark, table, bounds={"k": (44, 44)})
     assert got2.count() == 1
+
+
+def test_compaction_keeps_bloom_and_prior_stat_columns(spark, table):
+    """OPTIMIZE re-records its cluster columns AND the selected files'
+    prior stat and Bloom columns (the shared layout tail), so a point
+    lookup on a non-cluster Bloom key still skips after compaction. The
+    ``u`` values are a permutation of the ``k`` values, so every output
+    file's ``u`` extents span nearly the whole domain and only the Bloom
+    can dismiss a file."""
+
+    def part(ks):
+        return ks.select(
+            F.col("id").alias("k"), ((F.col("id") * 37) % 200).alias("u")
+        ).coalesce(1)
+
+    evens = spark.range(100).select((F.col("id") * 2).alias("id"))
+    odds = spark.range(100).select((F.col("id") * 2 + 1).alias("id"))
+    commit_version(spark, part(evens), table, stats_cols=["k"], bloom_cols=["u"])
+    commit_append(spark, part(odds), table, stats_cols=["k"], bloom_cols=["u"])
+    v = commit_compaction(spark, table, 100, ["k"])
+    hdr, files = read_manifest(spark, table, v)
+    assert hdr["op"] == "optimize" and len(files) == 2
+    stats = manifest_stats(hdr)
+    assert all(set(s) == {"k", "u"} for s in stats.values())
+    assert all(len(s["u"]) == 3 and s["u"][2] for s in stats.values()), (
+        "compaction shed the bloom filter"
+    )
+    got, acct = scan_version(spark, table, bounds={"u": (150, 150)})
+    assert [(r["k"], r["u"]) for r in got.collect()] == [(150, 150)]
+    assert acct["files_total"] == 2
+    assert acct["files_bloom_dismissed"] == 1
+    assert acct["files_scanned"] == 1
 
 
 def test_bloom_cols_refuse_unsupported_types(spark, table):

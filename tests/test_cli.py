@@ -82,3 +82,30 @@ def test_cli_rejects_nonpositive_parallelism_before_spark(spark, flag, capsys):
         assert exc.value.code == 2
         assert "must be >= 1" in capsys.readouterr().err
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+
+
+def test_cli_reads_without_a_mapper_shuffle(spark, tmp_path, capsys):
+    """-m is advisory on the DataFrame path: one run is the prefix plan's
+    own 4 Spark jobs (no round-robin pre-shuffle to M partitions), and
+    the answer and iter{L} layout do not depend on M."""
+    f = tmp_path / "lines.txt"
+    f.write_text("".join(f"{i:05d}-user@example.com\n" for i in range(2000)))
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-jobs", "count the jobs of one CLI run")
+    try:
+        assert main(["-i", str(f)]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cli-jobs")) == 4
+    capsys.readouterr()
+    runs = []
+    for m in ("1", "5"):
+        out = tmp_path / f"out{m}"
+        assert main(["-i", str(f), "-m", m, "--out", str(out)]) == 0
+        layout = sorted(
+            (p.parent.name, p.read_text()) for p in out.glob("iter*/result.txt")
+        )
+        runs.append((capsys.readouterr().out, layout))
+    assert runs[0] == runs[1]
+    assert "Result = 5" in runs[0][0]
+    assert runs[0][1][-1] == ("iter5", "1\n")

@@ -11,6 +11,7 @@ import stat
 import tempfile
 
 import pyarrow as pa
+import pytest
 
 from otus_cpp_11_spark import session
 
@@ -61,3 +62,16 @@ def test_session_workers_run_over_unix_sockets(spark):
 
     got = spark.range(5).mapInArrow(double, "id long").collect()
     assert sorted(r.id for r in got) == [0, 2, 4, 6, 8]
+
+
+def test_get_spark_rejects_nonpositive_shuffle_partitions(spark, monkeypatch):
+    """Zero shuffle partitions, from the argument or SPARK_GRAFT_SHUFFLE,
+    raise ValueError before the builder runs (a fresh session built that
+    way hangs; never build one here). The live session keeps its conf."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(ValueError, match="shuffle_partitions must be >= 1"):
+        session.get_spark(shuffle_partitions=0)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "0")
+    with pytest.raises(ValueError, match="shuffle_partitions must be >= 1"):
+        session.get_spark()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior

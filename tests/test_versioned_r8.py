@@ -453,6 +453,34 @@ def test_change_feed_upsert_classification_and_tombstones(spark, table):
     assert len([r for r in rows if r[0] == 2]) == 4
 
 
+def test_change_feed_upsert_null_key_is_an_insert(spark, table):
+    """The feed is classified in one window pass over the keys, and a
+    window groups NULL keys where the merge's equality join never
+    matches them: a delta row with a NULL key matches no stored row, so
+    it must be fed as an insert, never as half of an update pair."""
+    commit_version(spark, _mk(spark, [(1, "a"), (None, "n")]), table,
+                   stats_cols=["k"])
+    commit_upsert(spark, _mk(spark, [(None, "m"), (1, "A")]), table, ["k"],
+                  stats_cols=["k"], change_feed=True)
+    from otus_cpp_11_spark.ops.versioned import read_change_feed
+
+    got = sorted(
+        (
+            (r.k, r.v, r._change_type)
+            for r in read_change_feed(spark, table, 2, 2).collect()
+        ),
+        key=repr,
+    )
+    assert got == sorted(
+        [
+            (None, "m", "insert"),
+            (1, "a", "update_preimage"),
+            (1, "A", "update_postimage"),
+        ],
+        key=repr,
+    )
+
+
 def test_change_feed_dv_and_rewrite_deletes_agree(spark, table):
     """The feed must record identical delete rows whether the commit
     attached a deletion vector or rewrote the file."""
