@@ -17,10 +17,11 @@ file's key extents tight so stats-aware readers skip files.
 Scale notes: the rewrite is one ``repartitionByRange`` over the layout
 key — a single shuffle of the table, embarrassingly parallel, and in
 production scoped to the partitions the writers touched (per-partition
-OPTIMIZE), not the whole table. The staging+swap protocol is shared
-with the streaming maintainers (write the new layout fully, then two FS
-metadata ops); under an ACID format this becomes a metadata-only commit
-and readers never observe the swap window.
+OPTIMIZE), not the whole table. This module's plain-directory rewrite
+uses staging+swap (write the new layout fully, then two FS metadata
+ops). The streaming maintainers no longer share it: since r8 they commit
+to ops.versioned tables, where compaction is ``commit_compaction``, a
+manifest commit whose readers never observe a swap window.
 """
 
 from __future__ import annotations

@@ -990,6 +990,7 @@ def versioned_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otus_cpp_11_spark.ops.versioned import commit_append, commit_version
     from otus_cpp_11_spark.session import scratch_dir
     from otus_cpp_11_spark.sources import register_versioned_table_source
+    from otus_cpp_11_spark.streaming import run_available_now
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -1001,20 +1002,9 @@ def versioned_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_append(spark, ev.where((eid > mx // 3) & (eid <= 2 * mx // 3)), tbl)
     commit_append(spark, ev.where(eid > 2 * mx // 3), tbl)
     register_versioned_table_source(spark)
-    name = "versioned_stream_rollup_sink"
-    q = (
-        spark.readStream.format("versioned_table")
-        .option("path", tbl)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.format("versioned_table").option("path", tbl).load()
     return (
-        spark.table(name)
+        run_available_now(stream, "versioned_stream_rollup_sink", "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1456,6 +1446,7 @@ def versioned_change_feed_streamed(spark: SparkSession, sf_dir: str) -> DataFram
     boundaries. Plan: O(changes) driver planning (one marker read per
     version, no snapshot replay), Arrow-batched executor reads."""
     from otus_cpp_11_spark.sources import register_versioned_table_source
+    from otus_cpp_11_spark.streaming import run_available_now
 
     register_versioned_table_source(spark)
     tbl = _cdf_feed_table(spark, sf_dir)
@@ -1466,15 +1457,8 @@ def versioned_change_feed_streamed(spark: SparkSession, sf_dir: str) -> DataFram
         .load()
     )
     name = f"cdf_feed_{abs(hash(tbl)) % 10**8}"
-    (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
     return (
-        spark.table(name)
+        run_available_now(stream, name, "append")
         .select(*_CDF_FEED_COLS)
         .orderBy("_commit_version", "user_id", "_change_type")
     )

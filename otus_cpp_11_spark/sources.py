@@ -14,6 +14,7 @@ recompute any aggregate of the stream without reading it.
 from __future__ import annotations
 
 import logging
+import re
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -243,14 +244,17 @@ def _vt_parse_ts(raw: str) -> float:
 
 
 def _vt_parse_bytes(raw) -> int:
-    """Byte-cap option value: a plain integer byte count, or with a
-    Delta-style binary suffix (``10k`` / ``64m`` / ``1g``)."""
-    s = str(raw).strip().lower()
-    mult = 1
-    if s and s[-1] in "kmg":
-        mult = {"k": 1024, "m": 1024**2, "g": 1024**3}[s[-1]]
-        s = s[:-1]
-    return int(s) * mult
+    """Byte-cap option value in Spark's byte-string grammar: a whole
+    number with an optional binary multiplier ``k/m/g/t/p`` and an
+    optional trailing ``b`` (``10``, ``10k``, ``64mb``, ``1gb``, ``2t``).
+    Anything else is refused by name, never half-parsed."""
+    m = re.fullmatch(r"([0-9]+)([kmgtp]?)b?", str(raw).strip().lower())
+    if m is None:
+        raise ValueError(
+            "versioned_table: maxBytesPerTrigger must be a byte size such "
+            f"as '1048576', '64m' or '1gb', got {raw!r}"
+        )
+    return int(m.group(1)) * 1024 ** " kmgtp".index(m.group(2) or " ")
 
 
 def _vt_opts(options: dict) -> dict:

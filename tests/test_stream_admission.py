@@ -260,9 +260,14 @@ def test_byte_cap_suffix_and_invalid_values(spark, table, tmp_path):
     assert _vt_parse_bytes("10k") == 10 * 1024
     assert _vt_parse_bytes("2m") == 2 * 1024**2
     assert _vt_parse_bytes("1g") == 1024**3
+    # Spark's byte-string grammar: optional k/m/g/t/p, optional 'b'
+    assert _vt_parse_bytes("64mb") == 64 * 1024**2
+    assert _vt_parse_bytes("1gb") == 1024**3
+    assert _vt_parse_bytes("2t") == 2 * 1024**4
     commit_version(spark, _df(spark, 0, 5, "v1"), table)
-    with pytest.raises(ValueError, match="maxBytesPerTrigger"):
-        _VTStreamReader({"path": table, "maxBytesPerTrigger": "0"})
+    for bad in ("0", "abc"):
+        with pytest.raises(ValueError, match="maxBytesPerTrigger"):
+            _VTStreamReader({"path": table, "maxBytesPerTrigger": bad})
 
 
 def test_starting_timestamp_streams_only_later_commits(spark, table, tmp_path):

@@ -570,6 +570,56 @@ def test_versioned_append_sink_replay_with_interleaved_foreign_commit(
     assert current_version(spark, tbl) == v
 
 
+@pytest.mark.parametrize(
+    "maintainer",
+    ["cdc_upsert_user_state", "incremental_scd2_history", "append_stream_to_versioned"],
+)
+def test_zero_row_source_file_commits_no_version(spark, tmp_path, maintainer):
+    """A 0-row file landing in the source arrives as its own micro-batch,
+    and the shared versioned sink must skip it under every maintainer:
+    no new version on any table the maintainer owns (SCD2: the history
+    AND the raw store), same rows. The CDC and SCD2 maintainers once
+    carried their own copy of the foreachBatch protocol without the
+    empty-batch skip and committed a version for such a file."""
+    import os
+
+    import otus_cpp_11_spark.streaming as S
+    from otus_cpp_11_spark.ops.versioned import current_version, read_version
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = spark.createDataFrame(
+        [(1, t0, 10, "click", 1.0), (2, t0 + dt.timedelta(minutes=5), 20, "view", 2.0)],
+        "user_id bigint, ts timestamp, event_id bigint, event_type string, "
+        "value double",
+    )
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    rows.coalesce(1).write.parquet(src)
+    tables = [str(tmp_path / "target")]
+    if maintainer == "incremental_scd2_history":
+        tables.append(str(tmp_path / "raw"))
+
+    def run():
+        stream = spark.readStream.schema(rows.schema).parquet(src)
+        getattr(S, maintainer)(stream, *tables, checkpoint=ckpt).awaitTermination()
+
+    def n_batches():
+        return sum(f.isdigit() for f in os.listdir(os.path.join(ckpt, "offsets")))
+
+    def state():
+        return [
+            (current_version(spark, t), sorted(map(str, read_version(spark, t).collect())))
+            for t in tables
+        ]
+
+    run()
+    before, batches = state(), n_batches()
+    assert all(v == 1 for v, _ in before)
+    rows.limit(0).coalesce(1).write.mode("append").parquet(src)
+    run()
+    assert n_batches() == batches + 1  # the empty file was delivered
+    assert state() == before
+
+
 def test_bm25_stats_merge_path_equivalence(spark):
     """The additive-merge contract for the BM25 stats maintainer: merging
     per-batch deltas over ANY split of the corpus equals the from-scratch
