@@ -145,18 +145,14 @@ def get_spark(
         # nearly no rows are actually pruned: docs with <k words / null
         # keys are rare-to-impossible here by construction). Exclusion is
         # semantics-preserving (both rules only ADD redundant filters) —
-        # A/B floors and plan diffs in OPTIMIZATION_r13.md; overridable
-        # per deployment via SPARK_GRAFT_EXCLUDED_RULES for lakes where
-        # null-key pruning at the scan outweighs duplicated projection.
+        # A/B floors and plan diffs in OPTIMIZATION_r13.md. A lake where
+        # null-key pruning at the scan outweighs duplicated projection
+        # sets its own value through get_spark(extra_conf=...), which is
+        # applied after this.
         .config(
             "spark.sql.optimizer.excludedRules",
-            os.environ.get(
-                "SPARK_GRAFT_EXCLUDED_RULES",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate,"
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromConstraints",
-            ),
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate,"
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints",
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -618,6 +618,31 @@ def test_append_optimistic_retry_composes_without_data_rewrite(spark, table):
         with pytest.raises(V.CommitConflict):
             V.commit_append(spark, loser_rows, table, max_retries=0)
 
+
+def test_append_retry_refuses_a_nullability_only_schema_change(spark, table):
+    """The append retry compares schemas with full StructType equality,
+    like every other retry: a winning commit that changed only the
+    table's nullability (same simpleString) makes the stale appender
+    raise CommitConflict instead of committing its stale schema over
+    the winner's."""
+    from unittest import mock
+
+    import otus_cpp_11_spark.ops.versioned as V
+
+    commit_version(spark, _df(spark, 10, "base"), table)  # k, tag NOT NULL
+    winner = spark.createDataFrame([(100, "winner")], "k bigint, tag string")
+    commit_version(spark, winner, table)  # v2: the same columns, nullable
+    s1, s2 = (
+        json.loads(version_header(spark, table, v)["schema"]) for v in (1, 2)
+    )
+    assert s1 != s2
+    assert [f["type"] for f in s1["fields"]] == [f["type"] for f in s2["fields"]]
+    with mock.patch.object(V, "current_version", side_effect=_stale_cv(V, 1)):
+        with pytest.raises(V.CommitConflict, match="schema"):
+            V.commit_append(spark, _df(spark, 5, "loser"), table, max_retries=2)
+    assert current_version(spark, table) == 2
+
+
 def test_append_retry_with_merge_schema_composes_against_old_parent(spark, table):
     """merge_schema + max_retries: the loser validated its ADDITIVE
     evolution against a pre-race parent; a same-schema append winning the

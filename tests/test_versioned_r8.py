@@ -16,16 +16,23 @@ from pyspark.sql import functions as F
 
 from otus_cpp_11_spark.ops import manifest_format as mf
 from otus_cpp_11_spark.ops.versioned import (
+    add_constraint,
     clone_version,
     commit_append,
     commit_compaction,
     commit_delete,
+    commit_drop_column,
+    commit_rename_column,
     commit_update,
     commit_upsert,
     commit_version,
+    commit_widen_column,
     current_version,
     diff_versions,
+    drop_constraint,
     manifest_dvs,
+    manifest_rows,
+    manifest_stats,
     metadata_count,
     read_manifest,
     read_version,
@@ -273,6 +280,41 @@ def test_restore_carries_dv_state(spark, table):
     v4 = restore_version(spark, table, 2)
     assert read_version(spark, table, v4).count() == 99
     assert read_version(spark, table, v4).where("k = 2").count() == 1
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["restore", "rename", "widen", "drop", "add_constraint", "drop_constraint"],
+)
+def test_metadata_only_commit_carries_stats_rows_and_dvs(spark, table, op):
+    """Every metadata-only commit carries each file by reference with
+    its parent's stats, row count and deletion vector."""
+    base = spark.range(0, 100).select(
+        F.col("id").alias("k"), F.col("id").cast("int").alias("n"),
+        F.lit("a").alias("tag"),
+    )
+    commit_version(spark, base.coalesce(2), table, stats_cols=["k"])
+    commit_delete(spark, table, "k = 1", dv_max_fraction=0.1)  # a DV
+    if op == "drop_constraint":
+        add_constraint(spark, table, "pos", "k >= 0")
+    parent = current_version(spark, table)
+    run = {
+        "restore": lambda: restore_version(spark, table, parent),
+        "rename": lambda: commit_rename_column(spark, table, "tag", "label"),
+        "widen": lambda: commit_widen_column(spark, table, "n", "bigint"),
+        "drop": lambda: commit_drop_column(spark, table, "tag"),
+        "add_constraint": lambda: add_constraint(spark, table, "pos", "k >= 0"),
+        "drop_constraint": lambda: drop_constraint(spark, table, "pos"),
+    }
+    assert run[op]() == parent + 1
+    hp, fp = read_manifest(spark, table, parent)
+    hv, fv = read_manifest(spark, table, parent + 1)
+    assert manifest_stats(hp) and manifest_dvs(hp)
+    assert fv == fp
+    assert manifest_stats(hv) == manifest_stats(hp)
+    assert manifest_rows(hv) == manifest_rows(hp)
+    assert manifest_dvs(hv) == manifest_dvs(hp)
+    assert metadata_count(spark, table, strict=True) == 99
 
 
 # ---------------------------------------------------------------------------
