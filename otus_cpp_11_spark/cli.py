@@ -4,11 +4,13 @@ src/main.cpp:49), ``-d/--debug`` verbosity — running the flagship
 minimal-unique-prefix search (src/main.cpp:59-99) and printing
 ``Result = L`` exactly like the reference.
 
-R maps to its Spark equivalent (SURVEY.md §1.4): R = shuffle partitions.
-M is accepted and validated for reference parity but is advisory on this
-DataFrame path: Spark sizes the input splits itself, the prefix plan
-range-sorts every line right after the read, and the answer does not
-depend on M, so no round-robin pre-shuffle to M partitions is paid.
+R maps to its Spark equivalent (SURVEY.md §1.4): R = shuffle partitions,
+which only sizes the prefix query's range plan; lines that fit one AQE
+partition are sorted in one task whatever R is. M is accepted and
+validated for reference parity but is advisory on this DataFrame path:
+Spark sizes the input splits itself, the prefix plan sorts every line
+right after the read, and the answer does not depend on M, so no
+round-robin pre-shuffle to M partitions is paid.
 ``--out`` optionally writes per-iteration ``iter{L}/result.txt`` files
 (0/1) mirroring the reference's output layout
 (src/runner.cpp:65), plus the final answer.

@@ -5,10 +5,14 @@ Reference contract (description/homework/mapreduce.h:26-64, SURVEY.md §3.3):
 construct with (mappers M, reducers R); inject any
 ``str -> list[(str, int)]`` mapper (flatMap-shaped, mapreduce.hpp:26) and any
 ``(str, int) -> bool`` reducer (ordered fold, mapreduce.hpp:27); ``run``
-guarantees the mapper sees every input line exactly once and the reducer
-sees its partition's pairs in **globally sorted key order** with **all equal
-keys in one partition**; the job result is the AND of every reducer vote
-(runner.cpp:62-80).
+shuffles each emitted pair exactly once and the reducer sees its
+partition's pairs in **globally sorted key order** with **all equal keys
+in one partition**; the job result is the AND of every reducer vote
+(runner.cpp:62-80). The mapper, unlike the reference's, is not called
+exactly once per line: with R >= 2 it runs twice over every line, once in
+the sketch job that picks the range bounds and once in the shuffle (the
+pairs are not persisted between the two), so it must be a pure function
+of the line. With R = 1 there is no sketch job and it runs once.
 
 Spark-first realization — each reference stage maps onto the runtime:
 

@@ -3131,16 +3131,18 @@ def _append_work(
             f.name for f in df.schema.fields if f.name not in committed.names
         ]
         df = df.select(*committed.names, *new_names)  # stable column order
-        new_names = set(new_names)
         # evolved columns are NULLABLE in the committed schema no
         # matter what the writer's frame claimed: every pre-evolution
-        # row reads NULL for them (Delta marks added columns the same)
+        # row reads NULL for them (Delta marks added columns the same).
+        # A committed column stays nullable when either side is: its
+        # committed rows may already hold NULLs.
+        was_nullable = {f.name: f.nullable for f in committed.fields}
         schema = StructType(
             [
                 StructField(
                     f.name,
                     f.dataType,
-                    True if f.name in new_names else f.nullable,
+                    was_nullable.get(f.name, True) or f.nullable,
                     f.metadata,
                 )
                 for f in df.schema.fields

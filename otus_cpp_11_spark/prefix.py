@@ -20,21 +20,26 @@ no non-empty line means no L exists (NULL). Spark sorts UTF-8 bytes, which
 orders strings exactly as code points do; the LCP counts code points, as
 ``substring`` does.
 
-The plan is the reference's own sort, spread out:
+The plan is the reference's own sort, in one of two shapes; both fold the
+sorted lines with ``_fold_sorted`` and stitch the folds with ``_stitch``.
 
-* **sort** — ``repartitionByRange`` with no fixed partition count (AQE
-  coalesces the ranges; a fixed wide split costs more than it saves on
-  small inputs), then ``sortWithinPartitions``. The shuffle carries each
-  line once: O(rows), not O(rows x length).
-* **fold** — a ``mapInArrow`` scan per partition emits (first line, last
-  line, max adjacent LCP, equal-neighbour flag).
-* **stitch** — ``repartition(1)`` and one more ``mapInArrow`` compare each
-  partition's last line with the next one's first (the reference's
-  ``align_blocks``) and render the answer.
+* **one task** — when the optimizer's size estimate of the lines is at
+  most AQE's coalescing target (``coalescePartitions.minPartitionSize``
+  with ``parallelismFirst`` on, else ``advisoryPartitionSizeInBytes``), a
+  range shuffle would be coalesced into one partition anyway:
+  ``coalesce(1)``, ``sortWithinPartitions`` and one ``mapInArrow`` that
+  folds and stitches. One Spark job, no shuffle.
+* **range** — otherwise, or with AQE coalescing off, or with no estimate
+  (an RDD-backed frame reports ``Long.MaxValue``): ``repartitionByRange``
+  with no fixed partition count (AQE coalesces the ranges),
+  ``sortWithinPartitions``, a ``mapInArrow`` fold per partition, then
+  ``repartition(1)`` and a ``mapInArrow`` stitch that crosses each
+  partition boundary (the reference's ``align_blocks``). The shuffle
+  carries each line once: O(rows), not O(rows x length). Four Spark jobs.
 
 The fold is interpreted Python, one slice compare per row: about 2 us per
 short line on one core (0.38 s for 200k email-like lines), the per-row
-cost to watch at scale. The range sample is one more small job.
+cost to watch at scale.
 """
 
 from __future__ import annotations
@@ -106,17 +111,40 @@ def _stitch(batches):
     yield pa.RecordBatch.from_pydict({"min_unique_prefix_len": pa.array([answer], pa.int64())})
 
 
+def _fold_and_stitch(batches):
+    """The one-task plan's only Python step: all sorted lines -> the answer."""
+    return _stitch(_fold_sorted(batches))
+
+
+def _fits_one_partition(lines: DataFrame) -> bool:
+    """True when AQE would coalesce a shuffle of ``lines`` into one
+    partition (the target size of Spark's ``ShufflePartitionsUtil``)."""
+    session = lines.sparkSession
+    conf = session._jsparkSession.sessionState().conf()
+    if not (conf.adaptiveExecutionEnabled() and conf.coalesceShufflePartitionsEnabled()):
+        return False
+    entries = session._jvm.org.apache.spark.sql.internal.SQLConf
+    if conf.getConf(entries.COALESCE_PARTITIONS_PARALLELISM_FIRST()):
+        target = conf.getConf(entries.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
+    else:
+        target = conf.getConf(entries.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    return lines._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= target
+
+
 def min_unique_prefix_length_single_pass(df: DataFrame, col: str = "value") -> DataFrame:
     """Lazy one-row DataFrame ``[min_unique_prefix_len: bigint]`` (NULL = no
     unique prefix exists: duplicate full lines, or no non-empty line).
     NULL lines are ignored."""
     lines = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
+    schema = "min_unique_prefix_len bigint"
+    if _fits_one_partition(lines):
+        return lines.coalesce(1).sortWithinPartitions("v").mapInArrow(_fold_and_stitch, schema)
     folded = (
         lines.repartitionByRange("v")
         .sortWithinPartitions("v")
         .mapInArrow(_fold_sorted, "first string, last string, max_lcp bigint, dup boolean")
     )
-    return folded.repartition(1).mapInArrow(_stitch, "min_unique_prefix_len bigint")
+    return folded.repartition(1).mapInArrow(_stitch, schema)
 
 
 def min_unique_prefix_length(

@@ -84,19 +84,32 @@ def test_cli_rejects_nonpositive_parallelism_before_spark(spark, flag, capsys):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
 
 
-def test_cli_reads_without_a_mapper_shuffle(spark, tmp_path, capsys):
-    """-m is advisory on the DataFrame path: one run is the prefix plan's
-    own 4 Spark jobs (no round-robin pre-shuffle to M partitions), and
-    the answer and iter{L} layout do not depend on M."""
-    f = tmp_path / "lines.txt"
-    f.write_text("".join(f"{i:05d}-user@example.com\n" for i in range(2000)))
+def _cli_jobs(spark, group: str, argv: list[str]) -> int:
+    """Spark jobs one CLI run starts, counted in a fresh job group."""
     sc = spark.sparkContext
-    sc.setJobGroup("cli-jobs", "count the jobs of one CLI run")
+    sc.setJobGroup(group, "count the jobs of one CLI run")
     try:
-        assert main(["-i", str(f)]) == 0
+        assert main(argv) == 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("cli-jobs")) == 4
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cli_reads_without_a_mapper_shuffle(spark, tmp_path, capsys):
+    """-m is advisory on the DataFrame path: one run is the prefix plan's
+    own jobs (no round-robin pre-shuffle to M partitions), and the answer
+    and iter{L} layout do not depend on M. The 2000 lines fit one AQE
+    partition, so the plan is one job; the range plan is 4."""
+    f = tmp_path / "lines.txt"
+    f.write_text("".join(f"{i:05d}-user@example.com\n" for i in range(2000)))
+    assert _cli_jobs(spark, "cli-jobs", ["-i", str(f)]) == 1
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        assert _cli_jobs(spark, "cli-jobs-range", ["-i", str(f)]) == 4
+    finally:
+        spark.conf.set(key, prior)
     capsys.readouterr()
     runs = []
     for m in ("1", "5"):

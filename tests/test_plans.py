@@ -119,10 +119,24 @@ def test_q18_semi_join_is_broadcast(spark, plan):
 
 
 def test_prefix_min_unique_len_is_one_range_sort_of_the_lines(spark):
+    # the customer names fit one AQE partition: one task, no shuffle, one
+    # Python step that folds and stitches
     df = _query("prefix_min_unique_len", spark)
     nodes = list(_plan_nodes(df))
     assert _parquet_scans(df) == 1
-    # no per-character explode: each line is shuffled once, by range
+    assert not [n for n in nodes if n.nodeName() == "Exchange"]
+    assert [n.nodeName() for n in nodes].count("MapInArrow") == 1
+    # forced past one partition: each line is shuffled once, by range, and
+    # never exploded per character
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        df = _query("prefix_min_unique_len", spark)
+    finally:
+        spark.conf.set(key, prior)
+    nodes = list(_plan_nodes(df))
+    assert _parquet_scans(df) == 1
     assert not [n for n in nodes if n.nodeName() == "Generate"]
     ranges = [
         n

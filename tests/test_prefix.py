@@ -9,6 +9,8 @@ tests/fixtures/test.txt otherwise (conftest `golden_test_txt`).
 
 from __future__ import annotations
 
+import pytest
+
 from otus_cpp_11_spark.prefix import (
     has_duplicate_prefix,
     min_unique_prefix_length,
@@ -93,7 +95,8 @@ def test_prefix_answer_is_config_invariant(spark):
     """Range bounds, coalesced partitions and empty partitions move the
     partition boundaries the stitch crosses, never the answer. With 20
     lines and 32 unadaptive partitions nearly every neighbour pair,
-    the deepest included, straddles a boundary."""
+    the deepest included, straddles a boundary. A ``createDataFrame``
+    frame has no size estimate, so this always runs the range plan."""
     lines = [f"k{i:03d}x" for i in range(0, 200, 13)] + ["k130yy", "k0", "", "zz", None]
     df = spark.createDataFrame([(v,) for v in lines], "value string")
     keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
@@ -110,3 +113,51 @@ def test_prefix_answer_is_config_invariant(spark):
             spark.conf.set(k, v)
     # the deepest neighbours, "k130x" and "k130yy", share 4 characters
     assert {answer for _, _, answer in got} == {5}, sorted(got)
+
+
+# (file text, answer); None text is the golden test.txt
+LINE_FILES = {
+    "golden": (None, 2),
+    "edge": ("\n".join(["", "a", "ab", "abc", "déjà-vu", "déjà-lu"]) + "\n", 6),
+    "duplicates": ("alpha\nalpha\nbeta\ngamma\n", None),
+    "empty": ("", None),
+    "only_empty_lines": ("\n\n\n", None),
+}
+
+
+@pytest.mark.parametrize("name", list(LINE_FILES))
+def test_prefix_plans_agree_on_line_files(spark, tmp_path, golden_test_txt, name):
+    """The one-task plan and the range plan (forced by a 1-byte coalescing
+    target) give one row and the same answer under AQE on/off and 1/3/32
+    shuffle partitions. With AQE off the range plan always runs. An empty
+    file is a zero-split scan and still answers its one NULL row; its size
+    estimate is 0 bytes, so it fits even the 1-byte target."""
+    text, expected = LINE_FILES[name]
+    path = golden_test_txt
+    if text is not None:
+        path = tmp_path / "lines.txt"
+        path.write_text(text, encoding="utf-8")
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    )
+    prior = {k: spark.conf.get(k) for k in keys}
+    got = {}
+    try:
+        for plan, min_size in (("one-task", prior[keys[2]]), ("range", "1b")):
+            for aqe in ("true", "false"):
+                for parts in ("1", "3", "32"):
+                    spark.conf.set(keys[0], parts)
+                    spark.conf.set(keys[1], aqe)
+                    spark.conf.set(keys[2], min_size)
+                    q = min_unique_prefix_length_single_pass(spark.read.text(str(path)))
+                    shuffles = "Exchange" in q._jdf.queryExecution().executedPlan().toString()
+                    got[plan, aqe, parts] = (shuffles, q.collect())
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    for (plan, aqe, parts), (shuffles, rows) in got.items():
+        one_task = aqe == "true" and (plan == "one-task" or text == "")
+        assert shuffles != one_task, (plan, aqe, parts)
+        assert [r[0] for r in rows] == [expected], (plan, aqe, parts, rows)

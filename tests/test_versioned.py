@@ -505,6 +505,22 @@ def test_schema_evolution_refusals_and_time_travel(spark, table):
         )
 
 
+def test_merge_schema_append_keeps_committed_nullability(spark, table):
+    """A merge_schema append of a NOT NULL frame leaves a committed
+    nullable column nullable: the table's k already holds a NULL, so the
+    evolved header must not declare k or tag NOT NULL."""
+    base = spark.createDataFrame([(None, "a"), (1, "b")], "k bigint, tag string")
+    commit_version(spark, base, table)
+    not_null = spark.range(2, 4).select(
+        F.col("id").alias("k"), F.lit("c").alias("tag"), F.lit(1.5).alias("w")
+    )
+    assert not any(f.nullable for f in not_null.schema.fields)
+    commit_append(spark, not_null, table, merge_schema=True)
+    fields = json.loads(version_header(spark, table, 2)["schema"])["fields"]
+    assert {f["name"]: f["nullable"] for f in fields} == {"k": True, "tag": True, "w": True}
+    assert read_version(spark, table).where("k IS NULL").count() == 1
+
+
 def test_metadata_count_exact_across_lifecycle(spark, table):
     """COUNT(*) from manifest row counts (zero data IO, strict mode):
     exact after base commit, append, pruned upsert with tombstones, and
