@@ -25,8 +25,7 @@ sorted lines with ``_fold_sorted`` and stitch the folds with ``_stitch``.
 
 * **one task** — when the optimizer's size estimate of the lines is at
   most AQE's coalescing target (``coalescePartitions.minPartitionSize``
-  with ``parallelismFirst`` on, else ``advisoryPartitionSizeInBytes``), a
-  range shuffle would be coalesced into one partition anyway:
+  with ``parallelismFirst`` on, else ``advisoryPartitionSizeInBytes``):
   ``coalesce(1)``, ``sortWithinPartitions`` and one ``mapInArrow`` that
   folds and stitches. One Spark job, no shuffle.
 * **range** — otherwise, or with AQE coalescing off, or with no estimate
@@ -36,6 +35,17 @@ sorted lines with ``_fold_sorted`` and stitch the folds with ``_stitch``.
   ``repartition(1)`` and a ``mapInArrow`` stitch that crosses each
   partition boundary (the reference's ``align_blocks``). The shuffle
   carries each line once: O(rows), not O(rows x length). Four Spark jobs.
+
+The rule is a heuristic: it compares an input-size estimate (for a text
+scan, the bytes on disk) with a target that AQE applies to shuffle bytes,
+which run larger by a per-row overhead, so lines just under the target may
+take one task where AQE would have kept a few range partitions. Below the
+target the range plan offers no parallelism: its fold would run in one
+coalesced task, behind a sample and a shuffle. The target is not the
+crossover, though, only a safe side of it: on a 4-core host the one-task
+plan was the faster up to 4 MB of email-like lines, the two were level at
+about 8 MB, and the range plan won above that (1.3-1.5x at 32 MB, 1.6-1.8x
+at 64 MB), as its sort and fold run on every core.
 
 The fold is interpreted Python, one slice compare per row: about 2 us per
 short line on one core (0.38 s for 200k email-like lines), the per-row
@@ -117,8 +127,10 @@ def _fold_and_stitch(batches):
 
 
 def _fits_one_partition(lines: DataFrame) -> bool:
-    """True when AQE would coalesce a shuffle of ``lines`` into one
-    partition (the target size of Spark's ``ShufflePartitionsUtil``)."""
+    """True when the size estimate of ``lines`` is at most the target
+    size that Spark's ``ShufflePartitionsUtil`` coalesces shuffles to: an
+    estimate of whether AQE would keep one range partition, not a
+    guarantee (see the module docstring)."""
     session = lines.sparkSession
     conf = session._jsparkSession.sessionState().conf()
     if not (conf.adaptiveExecutionEnabled() and conf.coalesceShufflePartitionsEnabled()):
